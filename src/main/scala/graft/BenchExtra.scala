@@ -17,6 +17,11 @@ import graft.spark.PagesGen
   *    + repartition write like the contract bench does).
   *  - "micro": single-threaded per-variant microbench of payload BUILD and
   *    kernel EXTRACT cost (the two sides of every extraction query).
+  *  - "corpusparts": per-partition row/byte/time spread of the bench corpus.
+  *  - "kernel": single-threaded phase profile of the extraction kernel
+  *    (open / content / extractText, HTML split, fixture build phases).
+  *  - "mh": minhash pipeline phase decomposition (signature, candidates,
+  *    pairs, groups).
   *  - "plan" <name> <outFile>: write .explain("formatted") of a query.
   */
 object BenchExtra {
@@ -245,28 +250,8 @@ object BenchExtra {
         val tFlate = rep3 { contents.foreach(graft.pdf.Filters.flateEncode(_)) }
         println(f"""{"kernel":"build","lines_s":$tLines%.3f,"content_s":$tContentB%.3f,"flate_s":$tFlate%.3f}""")
 
-      case "abq" =>
-        // Interleaved A/B of named queries with spreadScan off vs on (same
-        // session, alternating reps — robust to this VM's neighbor noise).
-        val names = args.drop(1).toSeq
-        val reps = 3
-        for (name <- names) {
-          val fn = SparkEntry.queries(name)
-          val offs = new Array[Double](reps)
-          val ons = new Array[Double](reps)
-          for (r <- 0 until reps) {
-            spark.conf.set("spark.graft.spreadScan", "off")
-            offs(r) = timed(noop(fn(spark, sfDir)))
-            spark.conf.set("spark.graft.spreadScan", "auto")
-            ons(r) = timed(noop(fn(spark, sfDir)))
-          }
-          def fmt(a: Array[Double]) = a.map(v => f"$v%.3f").mkString("[", ",", "]")
-          println(s"""{"abq":"$name","off":${fmt(offs)},"on":${fmt(ons)},"min_off":${f"${offs.min}%.3f"},"min_on":${f"${ons.min}%.3f"}}""")
-        }
-
       case "mh" =>
         // minhash pipeline phase decomposition (warm, 2 reps each)
-        import org.apache.spark.sql.functions.col
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         def rep(f: => Unit): Double = { f; timed(f) }
         val tCand = rep(noop(graft.ops.Dedup.minhashCandidatePairs(docs)))
@@ -277,30 +262,9 @@ object BenchExtra {
         val tSig = rep(noop(graft.ops.Dedup.withMinhash(docs).select("doc_id", "mh_bands")))
         println(f"""{"mh_sig":$tSig%.3f,"mh_candidates":$tCand%.3f,"mh_pairs":$tPairs%.3f,"mh_groups":$tGroups%.3f}""")
 
-      case "ab25" =>
-        // A/B the minhash ops with raw (1-partition) vs spread input,
-        // interleaved reps to decorrelate machine drift.
-        import org.apache.spark.sql.functions.col
-        val raw = () => spark.read.parquet(s"$sfDir/documents.parquet")
-        val spread = () => graft.spark.TableIO.spreadScan(
-          spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id")
-        for (r <- 0 until 4) {
-          val tRawP = timed(noop(graft.ops.Dedup.minhashDupPairs(spark, raw())
-            .select(col("a"), col("b"), col("inter"), col("un")).orderBy("a", "b")))
-          val tSpreadP = timed(noop(graft.ops.Dedup.minhashDupPairs(spark, spread())
-            .select(col("a"), col("b"), col("inter"), col("un")).orderBy("a", "b")))
-          val tRawG = timed(noop(graft.ops.Dedup.minhashDupGroupsCC(spark, raw())
-            .orderBy("doc_id")))
-          val tSpreadG = timed(noop(graft.ops.Dedup.minhashDupGroupsCC(spark, spread())
-            .orderBy("doc_id")))
-          println(f"""{"ab25_rep":$r,"pairs_raw":$tRawP%.3f,"pairs_spread":$tSpreadP%.3f,"groups_raw":$tRawG%.3f,"groups_spread":$tSpreadG%.3f}""")
-        }
-
       case "plan" =>
         val name = args(1)
         val outFile = args(2)
-        if (args.length > 3 && args(3) == "nospread")
-          spark.conf.set("spark.graft.spreadScan", "off")
         val fn = SparkEntry.queries(name)
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(

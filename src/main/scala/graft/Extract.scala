@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.pdf._
-import graft.pdf.{Deadline, PdfTimeout}
 import graft.html.HtmlExtract
 
 /** One extracted span: page index + [start,end) byte offsets into textBytes. */
@@ -42,38 +41,40 @@ object Extract {
     */
   val DefaultTimeoutMs: Long = 30000L
 
-  def apply(payload: Array[Byte]): ExtractResult =
-    apply(payload, DefaultMaxBytesPerDoc, DefaultTimeoutMs)
+  def apply(payload: Array[Byte], maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
+            timeoutMs: Long = DefaultTimeoutMs): ExtractResult =
+    guarded(payload, maxBytesPerDoc, timeoutMs)(
+      (status, msg) => ExtractResult(Array.emptyByteArray, Nil, status, msg)) {
+      if (isPdf(payload)) extractPdf(payload)
+      else extractHtml(payload)
+    }
 
-  def apply(payload: Array[Byte], maxBytesPerDoc: Int): ExtractResult =
-    apply(payload, maxBytesPerDoc, DefaultTimeoutMs)
-
-  def apply(payload: Array[Byte], maxBytesPerDoc: Int, timeoutMs: Long): ExtractResult = {
+  /** The guard contract of every per-document kernel entry point: an empty
+    * payload -> "empty", one over `maxBytesPerDoc` -> "skipped_oversize",
+    * otherwise `body` runs under the per-document Deadline (cleared on every
+    * exit) and a timeout becomes "timeout", any other throwable an "error"
+    * row. `fail(status, message)` builds those rows. Task cancellation
+    * (InterruptedException, with the interrupt flag re-set) and
+    * OutOfMemoryError propagate: the first must stop the task, and after the
+    * second the heap is unreliable. StackOverflowError stays an error row —
+    * the stack has fully unwound and the depth caps make it a property of the
+    * document, not a VM corruption.
+    */
+  private[graft] def guarded[T](payload: Array[Byte], maxBytesPerDoc: Int, timeoutMs: Long)(
+      fail: (String, String) => T)(body: => T): T = {
+    if (payload == null || payload.length == 0) return fail("empty", "")
+    if (payload.length > maxBytesPerDoc) return fail("skipped_oversize", "")
     try {
-      if (payload == null || payload.length == 0)
-        return ExtractResult(Array.emptyByteArray, Nil, "empty", "")
-      if (payload.length > maxBytesPerDoc)
-        return ExtractResult(Array.emptyByteArray, Nil, "skipped_oversize", "")
       if (timeoutMs > 0) Deadline.set(System.nanoTime() + timeoutMs * 1000000L)
-      try {
-        if (isPdf(payload)) extractPdf(payload)
-        else extractHtml(payload)
-      } finally Deadline.clear()
+      try body
+      finally Deadline.clear()
     } catch {
-      case _: PdfTimeout =>
-        ExtractResult(Array.emptyByteArray, Nil, "timeout", "per-document time budget exceeded")
+      case _: PdfTimeout => fail("timeout", "per-document time budget exceeded")
       case ie: InterruptedException =>
-        // Task cancellation (Spark kills speculative/cancelled tasks via
-        // interrupt) must propagate, not become a data row.
         Thread.currentThread().interrupt()
         throw ie
-      case fatal: OutOfMemoryError =>
-        throw fatal // the heap is unreliable now: fail the task, don't mask
-        // (StackOverflowError stays a clean error row: the stack has fully
-        // unwound and the depth caps make it a document property, not a VM
-        // corruption)
-      case e: Throwable => // absolute backstop: a kernel bug must not fail the task
-        ExtractResult(Array.emptyByteArray, Nil, "error", safeMsg(e))
+      case fatal: OutOfMemoryError => throw fatal
+      case e: Throwable            => fail("error", safeMsg(e))
     }
   }
 
@@ -82,118 +83,78 @@ object Extract {
       payload(0) == '%' && payload(1) == 'P' && payload(2) == 'D' &&
       payload(3) == 'F' && payload(4) == '-'
 
-  /** PDF branch: open -> page list -> per-page golden extraction. Pages are
-    * joined with "\n"; spans record each page's [start,end) in textBytes.
-    * Any page-level error aborts with the partial text accumulated so far
-    * (matching the reference's ExtractText error contract).
+  /** PDF branch: open -> page list -> per-page golden extraction, one part
+    * per page. A page-level error aborts with the partial text accumulated
+    * so far, that page's partial text included (the reference's ExtractText
+    * error contract).
     */
   def extractPdf(payload: Array[Byte]): ExtractResult = {
     val doc =
       try PdfDocument.open(payload)
       catch {
-        case t: PdfTimeout => throw t // handled at the top level -> status=timeout
-        case e: PdfError   => return ExtractResult(Array.emptyByteArray, Nil, "error", safeMsg(e))
+        case t: PdfTimeout => throw t // handled by the guard -> status=timeout
         case e: Exception  => return ExtractResult(Array.emptyByteArray, Nil, "error", safeMsg(e))
       }
-    if (doc.pages.length == 1) {
-      // Single-page fast path (the common crawl case): the page's bytes ARE
-      // the document bytes — skip the two full-buffer copies (BAOS write +
-      // toByteArray) the page loop pays. Output identical: span [0, len) on
-      // page 0, error contract unchanged (partial text + error row).
-      val page = doc.pages.head
+    val parts = new Array[Array[Byte]](doc.pages.length)
+    var n = 0
+    var error: String = null
+    val pages = doc.pages.iterator
+    while (error == null && pages.hasNext) {
+      val page = pages.next()
       val pe =
-        try {
-          val content = doc.allContentStreams(page)
-          TextExtractor.extractText(content, page.resources)
-        } catch {
+        try TextExtractor.extractText(doc.allContentStreams(page), page.resources)
+        catch {
           case t: PdfTimeout => throw t
           case e: Exception  => PageExtract(Array.emptyByteArray, Some(safeMsg(e)))
         }
-      val spans = Seq(Span(0, 0L, pe.bytes.length.toLong))
-      return pe.error match {
-        case Some(msg) => ExtractResult(pe.bytes, spans, "error", msg)
-        case None      => ExtractResult(pe.bytes, spans, "ok", "")
-      }
+      parts(n) = pe.bytes
+      n += 1
+      error = pe.error.orNull
     }
-    val buf = new java.io.ByteArrayOutputStream()
-    val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
-    var pageIdx = 0
-    for (page <- doc.pages) {
-      if (pageIdx > 0) buf.write('\n')
-      val start = buf.size().toLong
-      val pe =
-        try {
-          val content = doc.allContentStreams(page)
-          TextExtractor.extractText(content, page.resources)
-        } catch {
-          case t: PdfTimeout => throw t // -> status=timeout at the top level
-          case e: Exception  => PageExtract(Array.emptyByteArray, Some(safeMsg(e)))
-        }
-      buf.write(pe.bytes)
-      spans += Span(pageIdx, start, buf.size().toLong)
-      pe.error match {
-        case Some(msg) => return ExtractResult(buf.toByteArray, spans.toSeq, "error", msg)
-        case None      => ()
-      }
-      pageIdx += 1
-    }
-    ExtractResult(buf.toByteArray, spans.toSeq, "ok", "")
+    if (error == null) assemble(parts, n, "ok", "") else assemble(parts, n, "error", error)
   }
 
-  /** HTML branch: boilerplate strip; one span per kept block. */
+  /** HTML branch: boilerplate strip; title (when present) then the kept
+    * blocks, one part each. No part contains '\n' (the run loop and the
+    * title collapse both fold it into a space), so each span is one line.
+    * Per-part UTF-8 equals whole-string UTF-8: the '\n' join char cannot
+    * complete a surrogate pair, and a lone surrogate encodes to '?' either way.
+    */
   def extractHtml(payload: Array[Byte]): ExtractResult = {
     val res = HtmlExtract.extract(payload)
-    // Output bytes assembled directly from the parts (title, then blocks,
-    // joined by '\n') — the res.text mkString built a full intermediate
-    // String only to be encoded once and discarded. Per-part UTF-8 equals
-    // whole-string UTF-8 here: the '\n' join char cannot complete a
-    // surrogate pair, and a lone surrogate encodes to '?' either way.
-    val bytes: Array[Byte] = {
-      val title = res.title
-      val blocks = res.blocks
-      val nParts = (if (title.nonEmpty) 1 else 0) + blocks.length
-      if (nParts == 0) Array.emptyByteArray
-      else {
-        val enc = new Array[Array[Byte]](nParts)
-        var j = 0
-        if (title.nonEmpty) { enc(0) = title.getBytes(UTF_8); j = 1 }
-        for (b <- blocks) { enc(j) = b.getBytes(UTF_8); j += 1 }
-        var total = nParts - 1 // the joining '\n' bytes
-        var i = 0
-        while (i < nParts) { total += enc(i).length; i += 1 }
-        val out = new Array[Byte](total)
-        var off = 0
-        i = 0
-        while (i < nParts) {
-          if (i > 0) { out(off) = '\n'; off += 1 }
-          System.arraycopy(enc(i), 0, out, off, enc(i).length)
-          off += enc(i).length
-          i += 1
-        }
-        out
+    val hasTitle = res.title.nonEmpty
+    val parts = new Array[Array[Byte]]((if (hasTitle) 1 else 0) + res.blocks.length)
+    var n = 0
+    if (hasTitle) { parts(0) = res.title.getBytes(UTF_8); n = 1 }
+    for (b <- res.blocks) { parts(n) = b.getBytes(UTF_8); n += 1 }
+    assemble(parts, n, "ok", "")
+  }
+
+  /** Output assembly shared by both branches: parts(0 until n) joined with
+    * '\n', one Span per part (its index is the span's page). A single part
+    * is returned as-is; several are copied once into an exactly sized array.
+    */
+  private def assemble(parts: Array[Array[Byte]], n: Int, status: String,
+                       error: String): ExtractResult = {
+    if (n == 0) return ExtractResult(Array.emptyByteArray, Nil, status, error)
+    var total = n - 1 // the joining '\n' bytes
+    var i = 0
+    while (i < n) { total += parts(i).length; i += 1 }
+    val out = if (n == 1) parts(0) else new Array[Byte](total)
+    val spans = new Array[Span](n)
+    var off = 0
+    i = 0
+    while (i < n) {
+      val p = parts(i)
+      if (n > 1) {
+        if (i > 0) { out(off) = '\n'; off += 1 }
+        System.arraycopy(p, 0, out, off, p.length)
       }
+      spans(i) = Span(i, off.toLong, (off + p.length).toLong)
+      off += p.length
+      i += 1
     }
-    // Span per output line (title counts as line 0 when present). Line
-    // boundaries are found on the ENCODED bytes: UTF-8 never embeds 0x0A
-    // inside a multi-byte sequence, so segments between '\n' bytes are
-    // exactly the per-line byte lengths the old split + re-encode computed
-    // (split("\n", -1) semantics: n newlines -> n+1 segments, trailing
-    // empties kept).
-    val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
-    if (bytes.length > 0) {
-      var idx = 0
-      var start = 0
-      var i = 0
-      while (i <= bytes.length) {
-        if (i == bytes.length || bytes(i) == '\n') {
-          spans += Span(idx, start.toLong, i.toLong)
-          idx += 1
-          start = i + 1
-        }
-        i += 1
-      }
-    }
-    ExtractResult(bytes, spans.toSeq, "ok", "")
+    ExtractResult(out, scala.collection.immutable.ArraySeq.unsafeWrapArray(spans), status, error)
   }
 
   private def safeMsg(e: Throwable): String = {

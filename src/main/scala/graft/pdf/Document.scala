@@ -106,6 +106,15 @@ final class PdfFileParser(val data: Array[Byte]) {
   var crypter: PdfCrypt = _
   private var repairsAttempted = false
   private val streamLengthLookupInProgress = mutable.HashSet.empty[Long]
+  /** Sorted offsets of every xref entry, built lazily by
+    * xrefNextObjectOffset; null whenever `xrefs` changed since (the parser
+    * writes `xrefs` only through putXref / replaceXrefs).
+    */
+  private var sortedOffsets: Array[Long] = null
+  private def putXref(num: Int, x: XrefEntry): Unit = { xrefs(num) = x; sortedOffsets = null }
+  private def replaceXrefs(m: collection.Map[Int, XrefEntry]): Unit = {
+    xrefs.clear(); xrefs ++= m; sortedOffsets = null
+  }
 
   def fileSize: Long = data.length.toLong
 
@@ -274,7 +283,7 @@ final class PdfFileParser(val data: Array[Byte]) {
         if (entIsN && entFirst > 1) {
           val existing = xrefs.get(curObjNum)
           if (existing.isEmpty || entGen > existing.get.generation)
-            xrefs(curObjNum) = XrefEntry.table(curObjNum, entGen, entFirst)
+            putXref(curObjNum, XrefEntry.table(curObjNum, entGen, entFirst))
         }
         curObjNum += 1
       } else if (txt.length > 6 && txt.startsWith("trailer")) {
@@ -385,10 +394,10 @@ final class PdfFileParser(val data: Array[Byte]) {
         if (ftype == 1) {
           val existing = xrefs.get(objNum)
           if (existing.isEmpty || n3.toInt > existing.get.generation)
-            xrefs(objNum) = XrefEntry.table(objNum, n3.toInt, n2)
+            putXref(objNum, XrefEntry.table(objNum, n3.toInt, n2))
         } else if (ftype == 2) {
           if (!xrefs.contains(objNum))
-            xrefs(objNum) = XrefEntry.objStream(objNum, n2.toInt, n3.toInt)
+            putXref(objNum, XrefEntry.objStream(objNum, n2.toInt, n3.toInt))
         } // type 0 (free) and unknown types: skipped -> null object
       }
       i += deltab
@@ -503,7 +512,7 @@ final class PdfFileParser(val data: Array[Byte]) {
         catch {
           case _: PdfError =>
             val rebuilt = repairRebuildXrefsTopDown()
-            xrefs.clear(); xrefs ++= rebuilt
+            replaceXrefs(rebuilt)
             return
         }
       val (actNum, actGen) = obj match {
@@ -513,7 +522,7 @@ final class PdfFileParser(val data: Array[Byte]) {
       }
       newXrefs(actNum.toInt) = xref.copy(objectNumber = actNum.toInt, generation = actGen.toInt)
     }
-    xrefs.clear(); xrefs ++= newXrefs
+    replaceXrefs(newXrefs)
   }
 
   // ---------------------------------------------------------------- lookups
@@ -540,7 +549,7 @@ final class PdfFileParser(val data: Array[Byte]) {
             case e: PdfError =>
               if (attemptRepairs) {
                 val rebuilt = repairRebuildXrefsTopDown()
-                xrefs.clear(); xrefs ++= rebuilt
+                replaceXrefs(rebuilt)
                 return lookupByNumber(objNumber, attemptRepairs = false)
               } else throw e
           }
@@ -666,14 +675,27 @@ final class PdfFileParser(val data: Array[Byte]) {
   // --------------------------------------------------- indirect object parse
 
   /** Next-highest xref offset, for stream-length validation
-    * (pdf/core/parser.go:1277-1285).
+    * (pdf/core/parser.go:1277-1285). The reference scans the whole xref map
+    * per stream (O(n^2) over a many-stream file); this searches a sorted
+    * copy of the offsets, rebuilt after any xref write.
     */
-  private def xrefNextObjectOffset(offset: Long): Long = {
-    var nextOffset = 0L
-    for (x <- xrefs.values) {
-      if (x.offset > offset && (x.offset < nextOffset || nextOffset == 0)) nextOffset = x.offset
+  private[pdf] def xrefNextObjectOffset(offset: Long): Long = {
+    if (sortedOffsets == null) {
+      val a = new Array[Long](xrefs.size)
+      val it = xrefs.valuesIterator
+      var i = 0
+      while (it.hasNext) { a(i) = it.next().offset; i += 1 }
+      java.util.Arrays.sort(a)
+      sortedOffsets = a
     }
-    nextOffset
+    // Binary search for the first offset > `offset` (0 when there is none).
+    var lo = 0
+    var hi = sortedOffsets.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (sortedOffsets(mid) > offset) hi = mid else lo = mid + 1
+    }
+    if (lo < sortedOffsets.length) sortedOffsets(lo) else 0L
   }
 
   /** Stream /Length tracing with the recursion guard

@@ -141,20 +141,19 @@ object Pipeline {
     * no-pre-shuffle default as text extraction) enumerates + decodes every
     * raster of every PDF payload through PdfImages and emits one ImageRow
     * per image with integer statistics, plus a marker row (source "none")
-    * per image-less document so lineage never loses documents. The FULL
-    * extract guard set applies per document: empty / oversize payloads and
-    * non-PDFs keep taxonomy marker rows, the per-document Deadline makes a
-    * hostile spinning PDF a `timeout` row instead of a stuck task, and the
-    * Extract-style Throwable backstop turns any kernel defect into an
-    * `error` row (interrupts and OOM still propagate). Raw samples stay
-    * inside the partition — at 100 TB the images table carries statistics
-    * and identities, with decoded bytes re-derivable downstream.
+    * per image-less document so lineage never loses documents. Each
+    * document runs under `Extract.guarded`, the guard text extraction uses:
+    * empty / oversize payloads keep taxonomy marker rows (as do non-PDFs), a
+    * hostile spinning PDF becomes a `timeout` row instead of a stuck task,
+    * and any kernel defect an `error` row (interrupts and OOM propagate).
+    * Raw samples stay inside the partition — at 100 TB the images table
+    * carries statistics and identities, with decoded bytes re-derivable
+    * downstream.
     */
   def extractImages(spark: SparkSession, pages: DataFrame,
                     maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
                     timeoutMs: Long = Extract.DefaultTimeoutMs): Dataset[ImageRow] = {
     import spark.implicits._
-    import graft.pdf.{Deadline, PdfTimeout}
     pages.select("url", "warc_ts", "html").as[KernelInRow]
       .mapPartitions { it =>
         it.flatMap { row =>
@@ -163,27 +162,17 @@ object Pipeline {
             Iterator.single(ImageRow(row.url, -1, -1, "none", 0, 0, 0, 0,
               if (payload == null) 0L else payload.length.toLong, 0L,
               nErrors, status))
-          if (payload == null || payload.length == 0) marker("empty", 0)
-          else if (payload.length > maxBytesPerDoc) marker("skipped_oversize", 0)
-          else if (!graft.Extract.isPdf(payload)) marker("non_pdf", 0)
-          else {
-            try {
-              if (timeoutMs > 0) Deadline.set(System.nanoTime() + timeoutMs * 1000000L)
-              val scan =
-                try graft.pdf.PdfImages.imagesOf(graft.pdf.PdfDocument.open(payload))
-                finally Deadline.clear()
+          Extract.guarded(payload, maxBytesPerDoc, timeoutMs)((status, _) =>
+            marker(status, if (status == "timeout" || status == "error") 1 else 0)) {
+            if (!Extract.isPdf(payload)) marker("non_pdf", 0)
+            else {
+              val scan = graft.pdf.PdfImages.imagesOf(graft.pdf.PdfDocument.open(payload))
               if (scan.images.isEmpty) marker("ok", scan.nErrors)
               else scan.images.iterator.map { im =>
                 ImageRow(row.url, im.page, im.idx, im.source, im.width,
                   im.height, im.bpc, im.components, im.data.length.toLong,
                   im.band0Sum, scan.nErrors, "ok")
               }
-            } catch {
-              case _: PdfTimeout => marker("timeout", 1)
-              case ie: InterruptedException =>
-                Thread.currentThread().interrupt(); throw ie
-              case fatal: OutOfMemoryError => throw fatal
-              case _: Throwable => marker("error", 1) // Extract-style backstop
             }
           }
         }

@@ -89,13 +89,11 @@ object TableIO {
     * pass, stable under retries per SPARK-38388's determinism concern);
     * round-robin otherwise. Row-level results are partitioning-invariant,
     * so downstream queries (all ORDER BY'd) are byte-identical either way.
+    * The spread only pays off when the downstream per-row work outweighs the
+    * extra exchange and task scheduling, so callers apply it per site (see
+    * SparkEntry.docsSpread); there is no session-wide switch.
     */
   def spreadScan(df: DataFrame, keyCol: String = null): DataFrame = {
-    // Operational escape hatch (also the A/B lever for measurement): the
-    // spread only pays off when the downstream per-row work outweighs the
-    // extra exchange + task-scheduling cost, which callers assess per site.
-    if (df.sparkSession.conf.getOption("spark.graft.spreadScan").contains("off"))
-      return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
     else if (keyCol != null) df.repartition(target, col(keyCol))

@@ -219,32 +219,51 @@ class HtmlSpec extends AnyFunSuite {
     assert(res.blocks.contains("HdNg")) // heading inside article/main kept
   }
 
-  test("bulk text-run path is byte-identical to the classic per-span path") {
-    // The r06 bulk appendRun (one builder call per run via a char buffer)
-    // must match the classic loop char-for-char: whitespace collapse,
-    // pendingWs carry across runs ("click <a>here</a>"), link-density
-    // counting, control chars (NOT whitespace), long runs, empty blocks.
+  test("text runs with and without entities keep their pinned results") {
+    // One run loop serves raw runs and entity-decoded text alike. Each
+    // expected value is the result the former two-loop code produced:
+    // whitespace collapse, pendingWs carried across runs ("click <a>here"),
+    // link-density counting on DECODED chars, control chars (not
+    // whitespace), U+00A0 from &nbsp; (not whitespace), &#10; and &#11;
+    // (whitespace once decoded), entities in <a> and in <title>.
+    import HtmlExtract.HtmlResult
     val cases = Seq(
-      "<p>a  b\tc\nde\ff</p>",
-      "<p> lead</p><p>trail </p><p>\t\n</p>",
-      "<p>click <a href='x'>here</a> now and some more padding text to keep</p>",
-      "<article>insidectrl chars stay</article>",
-      "<div>" + ("word " * 60) + "</div>",
-      "<h1>h</h1><nav>drop me</nav><p></p>",
-      "<title>a\n b </title><body><p>body text long enough to be kept ok yes</p>",
-      "plain text with no tags at all but long enough to keep as a block",
-      "<p>" + ("x" * 4096) + " tail</p>",
-      "<ul><li>one</li><li>two</li></ul><a>linky</a><p>mixed <a>l</a> t</p>")
-    for (html <- cases) {
-      val saved = HtmlExtract.bulkRuns
-      try {
-        HtmlExtract.bulkRuns = true
-        val bulk = HtmlExtract.extract(html)
-        HtmlExtract.bulkRuns = false
-        val classic = HtmlExtract.extract(html)
-        assert(bulk == classic, s"paths diverge on: ${html.take(60)}")
-      } finally HtmlExtract.bulkRuns = saved
-    }
-    assert(HtmlExtract.bulkRuns) // default stays the fast path
+      "<p>a  b\tc\nde\ff</p>" -> HtmlResult("", Seq()),
+      "<p> lead</p><p>trail </p><p>\t\n</p>" -> HtmlResult("", Seq()),
+      "<p>click <a href='x'>here</a> now and some more padding text to keep</p>" ->
+        HtmlResult("", Seq("click here now and some more padding text to keep")),
+      "<article>in\u0001side\u001fctrl chars stay</article>" ->
+        HtmlResult("", Seq("in\u0001side\u001fctrl chars stay")),
+      "<div>" + ("word " * 60) + "</div>" -> HtmlResult("", Seq(("word " * 60).trim)),
+      "<h1>h</h1><nav>drop me</nav><p></p>" -> HtmlResult("", Seq()),
+      "<title>a\n b </title><body><p>body text long enough to be kept ok yes</p>" ->
+        HtmlResult("a b", Seq("body text long enough to be kept ok yes")),
+      "plain text with no tags at all but long enough to keep as a block" ->
+        HtmlResult("", Seq("plain text with no tags at all but long enough to keep as a block")),
+      "<p>" + ("x" * 4096) + " tail</p>" -> HtmlResult("", Seq("x" * 4096 + " tail")),
+      "<ul><li>one</li><li>two</li></ul><a>linky</a><p>mixed <a>l</a> t</p>" ->
+        HtmlResult("", Seq()),
+      "<p>fish &amp; chips, salt &amp;amp; vinegar, and a long tail of words</p>" ->
+        HtmlResult("", Seq("fish & chips, salt &amp; vinegar, and a long tail of words")),
+      "<p>a&nbsp;b &nbsp; c&nbsp;&nbsp;d with enough text after it to be kept</p>" ->
+        HtmlResult("", Seq("a\u00a0b \u00a0 c\u00a0\u00a0d with enough text after it to be kept")),
+      "<p>line&#10;break &#10;&#10; next&#10;and enough words to keep</p>" +
+        "<p>&#10;lead and trail with words enough&#10;</p>" ->
+        HtmlResult("", Seq("line break next and enough words to keep",
+          "lead and trail with words enough")),
+      "<p>tab&#11;vt &#11; x&#11;&#11;y with enough text after it to keep</p>" ->
+        HtmlResult("", Seq("tab vt x y with enough text after it to keep")),
+      "<div>see <a href='x'>R&amp;D&nbsp;notes</a> for the full text here</div>" ->
+        HtmlResult("", Seq("see R&D\u00a0notes for the full text here")),
+      "<div><a>&amp;&amp;&amp;&amp;&amp;&amp;&amp;&amp;&amp;&amp;</a> plain words after the link run</div>" ->
+        HtmlResult("", Seq("&&&&&&&&&& plain words after the link run")),
+      "<div>click &amp; <a>here&#10;</a>&#10;now, then read the rest of the page</div>" ->
+        HtmlResult("", Seq("click & here now, then read the rest of the page")),
+      "<title> Q&amp;A &#10; &nbsp;page&#11;x &#9;end </title><p>a body long enough to be kept here</p>" ->
+        HtmlResult("Q&A \u00a0page x end", Seq("a body long enough to be kept here")),
+      "<title>&#10;</title><p>&lt;b&gt; not a tag &lt;/b&gt; and more text to keep it</p>" ->
+        HtmlResult("", Seq("<b> not a tag </b> and more text to keep it")))
+    for ((html, expected) <- cases)
+      assert(HtmlExtract.extract(html) == expected, s"on: ${html.take(60)}")
   }
 }

@@ -501,4 +501,56 @@ class DocumentSpec extends AnyFunSuite {
     assert(XrefLine.classify("2147483648 1") == null)
     assert(XrefLine.classify("15 2147483648 n") == null)
   }
+
+  private def manyStreams(n: Int): Array[Byte] = {
+    val bld = new PdfFixtures.Builder()
+    val raw = "BT (x) Tj ET".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    for (i <- 1 to n) bld.stream(i, s"<< /Length ${raw.length} >>", raw)
+    bld.build()
+  }
+
+  private def nextOffsetOracle(p: PdfFileParser, x: Long): Long = {
+    val above = p.xrefs.valuesIterator.map(_.offset).filter(_ > x)
+    if (above.hasNext) above.min else 0L
+  }
+
+  test("xrefNextObjectOffset: smallest offset above x, also after an xref repair") {
+    val pdf = manyStreams(40)
+    // Point object 3's entry at offset 2 (inside the header): its lookup
+    // parses the wrong object, which makes the parser rewrite the xref map.
+    val src = new String(pdf, java.nio.charset.StandardCharsets.ISO_8859_1)
+    val entry3 = src.lastIndexOf("\nxref\n") + "\nxref\n0 41\n".length + 3 * 20
+    val broken = (src.substring(0, entry3) + "0000000002" + src.substring(entry3 + 10))
+      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    val p = new PdfFileParser(broken)
+    p.load()
+    assert(p.xrefs(3).offset == 2L)
+    def offsets = p.xrefs.valuesIterator.map(_.offset).toSet
+    val before = offsets
+    for (x <- 0L to broken.length.toLong) // the sorted table is built here
+      assert(p.xrefNextObjectOffset(x) == nextOffsetOracle(p, x), s"x=$x")
+    p.lookup(3)
+    assert(offsets != before, "the repair rewrote the xref map")
+    for (x <- 0L to broken.length.toLong)
+      assert(p.xrefNextObjectOffset(x) == nextOffsetOracle(p, x), s"after repair x=$x")
+  }
+
+  test("stream-length validation is near-linear in the number of stream objects") {
+    // Each stream's /Length check asks for the next xref offset; a scan of
+    // the whole xref map per stream made opening n streams O(n^2).
+    def bestOf3(pdf: Array[Byte], n: Int): Long = (1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      val p = new PdfFileParser(pdf)
+      p.load()
+      var i = 1
+      while (i <= n) { assert(p.lookup(i).isInstanceOf[PdfStream]); i += 1 }
+      System.nanoTime() - t0
+    }.min
+    val small = manyStreams(2500)
+    val big = manyStreams(10000)
+    bestOf3(small, 2500) // JIT warm-up
+    val tSmall = bestOf3(small, 2500)
+    val tBig = bestOf3(big, 10000)
+    assert(tBig < 8 * tSmall, s"4x the objects took ${tBig.toDouble / tSmall}x the time")
+  }
 }
