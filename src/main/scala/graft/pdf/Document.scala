@@ -29,59 +29,93 @@ object XrefEntry {
 
 private final case class ObjStm(n: Int, ds: Array[Byte], offsets: Map[Int, Long])
 
-/** Strict whole-line classifier for the two canonical xref-table line shapes
-  * — the hot loop of every classic-xref open ran TWO regex matchers per
-  * entry line. A line is classified here ONLY when it is exactly
-  * `digits S+ digits S*$` (subsection) or `digits S+ digits S+ [nf] S*$`
-  * (entry) from position 0 with digit counts whose Int/Long parses cannot
-  * overflow; everything else (prefix junk the regexes' find() would skip,
-  * oversized numbers whose .toInt must keep throwing, trailer/noise lines)
-  * returns null and falls back to the original regex path, byte-identical.
-  * Strict-match results equal the regex results: leftmost-greedy \d+ from
-  * position 0 yields the same groups.
+/** The xref-table line classifier: decides the reference's
+  * `(\d+)\s+(\d+)\s*$` (subsection, tried first) and
+  * `(\d+)\s+(\d+)\s+([nf])\s*$` (entry) from the right end of the line, with
+  * `\s` = [\t\n\f\r ] and Go's `$` (end of text only). After the trailing
+  * spaces, a line ending in `D1 S+ D2` is a subsection and one ending in
+  * `D1 S+ D2 S+ [nf]` an entry, where D1 and D2 are maximal digit runs
+  * (leftmost-first matching makes group 1 the whole run) and any text may
+  * precede D1. Numbers are parsed as the reference's callers do, so an
+  * overflowing one throws the same NumberFormatException: the subsection's
+  * first number through toInt, the entry's offset through toLong and its
+  * generation through toInt.
   */
 private[pdf] object XrefLine {
-  /** kind: 1 = subsection(first), 2 = entry(first, gen, 'n'|'f'). */
-  final class Parsed(val kind: Int, val first: Long, val gen: Long, val nf: Char)
+  /** kind: 1 = subsection(first), 2 = entry(first = offset, gen, 'n'|'f'). */
+  final class Parsed(val kind: Int, val first: Long, val gen: Int, val nf: Char)
 
+  /** The parsed line, or null for any other line. */
   def classify(txt: String): Parsed = {
-    val L = txt.length
-    var p = 0
-    var a = 0L; var nA = 0
-    while (p < L && { val c = txt.charAt(p); c >= '0' && c <= '9' } && nA < 19) {
-      a = a * 10 + (txt.charAt(p) - '0'); p += 1; nA += 1
+    var end = skipBack(txt, txt.length, isRegexSpace)
+    val nf = if (end > 0) txt.charAt(end - 1) else ' '
+    val entry = nf == 'n' || nf == 'f'
+    if (entry) {
+      val genEnd = skipBack(txt, end - 1, isRegexSpace)
+      if (genEnd == end - 1) return null
+      end = genEnd
     }
-    if (nA == 0 || nA >= 19) return null
-    var nS = 0
-    while (p < L && isSp(txt.charAt(p))) { p += 1; nS += 1 }
-    if (nS == 0) return null
-    var b = 0L; var nB = 0
-    while (p < L && { val c = txt.charAt(p); c >= '0' && c <= '9' } && nB < 19) {
-      b = b * 10 + (txt.charAt(p) - '0'); p += 1; nB += 1
-    }
-    if (nB == 0 || nB >= 19) return null
-    // Trailing whitespace then either end (subsection) or [nf] then S*$.
-    var q = p
-    while (q < L && isSp(txt.charAt(q))) q += 1
-    if (q == L) {
-      // subsection (S*$ allows zero trailing spaces): the caller replays
-      // group(1).toInt, so an Int overflow must fall back to the regex path
-      // to keep throwing exactly as before
-      if (a > Int.MaxValue) return null
-      return new Parsed(1, a, b, ' ')
-    }
-    if (q == p) return null // [nf] must be S-separated from the gen digits
-    val c = txt.charAt(q)
-    if (c != 'n' && c != 'f') return null
-    var r = q + 1
-    while (r < L && isSp(txt.charAt(r))) r += 1
-    if (r != L) return null
-    if (b > Int.MaxValue) return null // gen .toInt must keep throwing via regex
-    new Parsed(2, a, b, c)
+    val d2 = skipBack(txt, end, isDecimalDigit)
+    if (d2 == end) return null
+    val sep = skipBack(txt, d2, isRegexSpace)
+    if (sep == d2) return null
+    val d1 = skipBack(txt, sep, isDecimalDigit)
+    if (d1 == sep) return null
+    if (entry) new Parsed(2, txt.substring(d1, sep).toLong, txt.substring(d2, end).toInt, nf)
+    else new Parsed(1, txt.substring(d1, sep).toInt.toLong, 0, ' ')
   }
 
-  @inline private def isSp(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
+  private def skipBack(txt: String, end: Int, in: Int => Boolean): Int = {
+    var i = end
+    while (i > 0 && in(txt.charAt(i - 1))) i -= 1
+    i
+  }
+}
+
+/** The `N G obj` header scanner for parseIndirectObject, parseXref and the
+  * top-down repair: finds the leftmost match of the reference's
+  * `(\d+)\s+(\d+)\s+obj` (`\s` = [\t\n\f\r ]) inside a byte window. A match
+  * can only start where a digit run starts, and the digit and space runs
+  * it spans are maximal, so each run start is tried once, without
+  * backtracking. Like a regex Matcher, it holds the bounds of the last match.
+  */
+private[pdf] final class ObjHeader {
+  private var data: Array[Byte] = _
+  var start = 0
+  private var numEnd = 0
+  private var genStart = 0
+  private var genEnd = 0
+  var end = 0
+
+  def find(data: Array[Byte], from: Int, until: Int): Boolean = {
+    this.data = data
+    def run(p: Int, in: Int => Boolean): Int = {
+      var i = p
+      while (i < until && in(data(i) & 0xff)) i += 1
+      i
+    }
+    var p = from
+    while (p < until) {
+      if (!isDecimalDigit(data(p) & 0xff)) p += 1
+      else {
+        val d1 = run(p, isDecimalDigit)
+        val s1 = run(d1, isRegexSpace)
+        val d2 = if (s1 > d1) run(s1, isDecimalDigit) else s1
+        val s2 = if (d2 > s1) run(d2, isRegexSpace) else d2
+        if (s2 > d2 && s2 + 3 <= until &&
+          data(s2) == 'o' && data(s2 + 1) == 'b' && data(s2 + 2) == 'j') {
+          start = p; numEnd = d1; genStart = s1; genEnd = d2; end = s2 + 3
+          return true
+        }
+        p = d1 // the next candidate is the next digit run
+      }
+    }
+    false
+  }
+
+  /** Object number and generation of the last match, as decimal strings. */
+  def num: String = new String(data, start, numEnd - start, ISO_8859_1)
+  def gen: String = new String(data, genStart, genEnd - genStart, ISO_8859_1)
 }
 
 /** File-layer parser for one in-memory PDF document. Mirrors the reference's
@@ -95,6 +129,7 @@ final class PdfFileParser(val data: Array[Byte]) {
   val lex = new ObjLexer(cur)
 
   val xrefs = mutable.HashMap.empty[Int, XrefEntry]
+  private val header = new ObjHeader
   private val objstms = mutable.HashMap.empty[Int, ObjStm]
   val objCache = mutable.HashMap.empty[Int, PdfObj]
   var trailer: PdfDict = _
@@ -117,6 +152,10 @@ final class PdfFileParser(val data: Array[Byte]) {
   }
 
   def fileSize: Long = data.length.toLong
+
+  /** An `N G obj` header in the 20 bytes at the cursor (the reference's peek). */
+  private def headerNearCursor(): Boolean =
+    header.find(data, cur.pos, math.min(cur.pos + 20, data.length))
 
   // ------------------------------------------------------------------ setup
 
@@ -230,9 +269,8 @@ final class PdfFileParser(val data: Array[Byte]) {
 
   /** pdf/core/parser.go:1040-1075 dispatch. */
   private def parseXref(): PdfDict = {
-    val bb = str(cur.peek(20))
-    if (indirectObject.matcher(bb).find()) parseXrefStream(None)
-    else if (xrefTable.matcher(bb).find()) parseXrefTable()
+    if (headerNearCursor()) parseXrefStream(None)
+    else if (xrefTable.matcher(str(cur.peek(20))).find()) parseXrefTable()
     else {
       repairSeekXrefMarker()
       parseXrefTable()
@@ -250,40 +288,16 @@ final class PdfFileParser(val data: Array[Byte]) {
       lex.skipSpaces()
       if (cur.atEof) throw new PdfError("EOF in xref table")
       val txt = lex.readTextLine()
-      // Strict-canonical lines bypass the two regex matchers the loop ran
-      // per entry line (XrefLine classifies only shapes whose regex result
-      // is provably identical; anything unusual — prefix junk, oversized
-      // numbers — returns null and takes the original regex path).
-      val fast = XrefLine.classify(txt)
-      // Subsection/entry line, fast-classified or regex-matched; -1 = neither.
-      var subFirst = -1L
-      var entFirst = -1L
-      var entGen = 0
-      var entIsN = false
-      if (fast != null) {
-        if (fast.kind == 1) subFirst = fast.first
-        else { entFirst = fast.first; entGen = fast.gen.toInt; entIsN = fast.nf == 'n' }
-      } else {
-        val m1 = xrefSubsection.matcher(txt)
-        if (m1.find()) subFirst = m1.group(1).toInt.toLong
-        else {
-          val m2 = xrefEntry.matcher(txt)
-          if (m2.find()) {
-            entFirst = m2.group(1).toLong
-            entGen = m2.group(2).toInt
-            entIsN = m2.group(3).toLowerCase == "n"
-          }
-        }
-      }
-      if (subFirst >= 0) {
-        curObjNum = subFirst.toInt
+      val line = XrefLine.classify(txt)
+      if (line != null && line.kind == 1) {
+        curObjNum = line.first.toInt
         insideSubsection = true
-      } else if (entFirst >= 0) {
+      } else if (line != null) {
         if (!insideSubsection) throw new PdfError("Xref invalid format")
-        if (entIsN && entFirst > 1) {
+        if (line.nf == 'n' && line.first > 1) {
           val existing = xrefs.get(curObjNum)
-          if (existing.isEmpty || entGen > existing.get.generation)
-            putXref(curObjNum, XrefEntry.table(curObjNum, entGen, entFirst))
+          if (existing.isEmpty || line.gen > existing.get.generation)
+            putXref(curObjNum, XrefEntry.table(curObjNum, line.gen, line.first))
         }
         curObjNum += 1
       } else if (txt.length > 6 && txt.startsWith("trailer")) {
@@ -481,15 +495,14 @@ final class PdfFileParser(val data: Array[Byte]) {
           if (i == 0) ok = false
         }
         if (ok) {
-          val objOffset = (k + 1).toLong - (bufLen - i)
-          val sb = new StringBuilder
-          var j = i + 1
-          while (j < bufLen) { sb.append(lastAt(k, j).toChar); j += 1 }
-          sb.append('j')
-          val m = indirectObject.matcher(sb.toString)
-          if (!m.find()) throw new PdfError("Unable to detect indirect object signature")
-          val objNum = m.group(1).toInt
-          val genNum = m.group(2).toInt
+          // The window [objOffset, k] is "D1 W+ D2 W+ obj" with W the PDF
+          // whitespace set; the header scan rejects a NUL in W, as the
+          // reference's regex does.
+          val objOffset = k + 1 - (bufLen - i)
+          if (!header.find(data, objOffset, k + 1))
+            throw new PdfError("Unable to detect indirect object signature")
+          val objNum = header.num.toInt
+          val genNum = header.gen.toInt
           val existing = table.get(objNum)
           if (existing.isEmpty || existing.get.generation < genNum)
             table(objNum) = XrefEntry.table(objNum, genNum, objOffset)
@@ -714,56 +727,15 @@ final class PdfFileParser(val data: Array[Byte]) {
   }
 
   /** pdf/core/parser.go:1318-1490, including the non-conformant stream-EOL
-    * handling and the next-xref-offset length correction.
+    * handling and the next-xref-offset length correction. The header is the
+    * leftmost `N G obj` in the 20 bytes at the cursor, so a small offset
+    * before it is tolerated.
     */
   def parseIndirectObject(): PdfObj = {
-    // FAST PATH: "N G obj" matched directly at the cursor within the same
-    // 20-byte window the regex sees (xref offsets point straight at the
-    // header in well-formed files) — skips two matcher runs + two window
-    // copies per object. Any deviation (leading offset, overlong header)
-    // falls back to the regex path with identical accept/reject behavior.
-    var objNum = -1L
-    var genNum = -1L
-    locally {
-      val data = cur.data
-      val win = math.min(cur.pos + 20, data.length)
-      var p = cur.pos
-      // the regex's \s class ([\t\n\f\r ]) — narrower than the PDF
-      // whitespace set (no NUL); keep them identical so accept/reject
-      // matches the fallback bit-for-bit
-      def rws(c: Int): Boolean =
-        c == '\t' || c == '\n' || c == '\f' || c == '\r' || c == ' '
-      var n1 = -1L
-      while (p < win && isDecimalDigit(data(p) & 0xff)) {
-        n1 = (if (n1 < 0) 0 else n1) * 10 + (data(p) - '0'); p += 1
-      }
-      if (n1 >= 0 && p < win && rws(data(p) & 0xff)) {
-        while (p < win && rws(data(p) & 0xff)) p += 1
-        var n2 = -1L
-        while (p < win && isDecimalDigit(data(p) & 0xff)) {
-          n2 = (if (n2 < 0) 0 else n2) * 10 + (data(p) - '0'); p += 1
-        }
-        if (n2 >= 0 && p < win && rws(data(p) & 0xff)) {
-          while (p < win && rws(data(p) & 0xff)) p += 1
-          if (p + 3 <= win && data(p) == 'o' && data(p + 1) == 'b' && data(p + 2) == 'j') {
-            objNum = n1; genNum = n2
-            cur.pos = p + 3
-          }
-        }
-      }
-    }
-    if (objNum < 0) {
-      val bb = str(cur.peek(20))
-      val m = indirectObject.matcher(bb)
-      if (!m.find()) throw new PdfError("Unable to detect indirect object signature")
-      cur.discard(m.start()) // tolerate a small offset
-      val hlen = m.end() - m.start()
-      val hb = str(cur.readExact(hlen))
-      val m2 = indirectObject.matcher(hb)
-      if (!m2.find()) throw new PdfError("Unable to detect indirect object signature")
-      objNum = m2.group(1).toLong
-      genNum = m2.group(2).toLong
-    }
+    if (!headerNearCursor()) throw new PdfError("Unable to detect indirect object signature")
+    val objNum = header.num.toLong
+    val genNum = header.gen.toLong
+    cur.pos = header.end
     var inner: PdfObj = null
 
     while (true) {

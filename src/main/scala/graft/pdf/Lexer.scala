@@ -6,9 +6,13 @@ import java.util.regex.Pattern
 
 import PdfObjs._
 
-/** Shared regexes of the file-layer parser. These mirror the reference's
-  * object-signature regexes (pdf/core/parser.go:23-33); `\s` is written as an
-  * explicit class to match Go's definition ([\t\n\f\r ]) rather than Java's.
+/** The file-layer regexes that remain: each runs once per file or once per
+  * repair (header version, %%EOF and startxref search, the xref-marker
+  * checks), never per object or per line, so they stay regexes. The
+  * per-token shapes (xref lines, `N G obj` headers, references and numbers)
+  * are byte scanners: `XrefLine`, `ObjHeader` and `ObjLexer.parseObject`.
+  * `\s` is written as an explicit class to match Go's definition
+  * ([\t\n\f\r ]) rather than Java's (reference: pdf/core/parser.go:23-33).
   */
 object PdfPatterns {
   private final val S = "[\\t\\n\\f\\r ]"
@@ -16,12 +20,6 @@ object PdfPatterns {
   val eof: Pattern = Pattern.compile("%%EOF")
   val xrefTable: Pattern = Pattern.compile(s"$S*xref$S*")
   val startXref: Pattern = Pattern.compile(s"startx?ref$S*(\\d+)")
-  val numeric: Pattern = Pattern.compile("^[\\+-.]*([0-9.]+)")
-  val exponential: Pattern = Pattern.compile("^[\\+-.]*([0-9.]+)e[\\+-.]*([0-9.]+)")
-  val reference: Pattern = Pattern.compile(s"^$S*(\\d+)$S+(\\d+)$S+R")
-  val indirectObject: Pattern = Pattern.compile(s"(\\d+)$S+(\\d+)$S+obj")
-  val xrefSubsection: Pattern = Pattern.compile(s"(\\d+)$S+(\\d+)$S*$$")
-  val xrefEntry: Pattern = Pattern.compile(s"(\\d+)$S+(\\d+)$S+([nf])$S*$$")
   val repairXrefTable: Pattern = Pattern.compile(s"[\\r\\n]$S*(xref)$S*[\\r\\n]")
   val repairXrefStart: Pattern = Pattern.compile(s"${S}xref$S*")
 
@@ -39,8 +37,6 @@ object PdfPatterns {
   * treat as fatal throw PdfError("EOF") here (document layer aborts anyway).
   */
 final class ObjLexer(val cur: ByteCursor) {
-  import PdfPatterns._
-
   // Fixed-size JVM stacks: cap recursive nesting (see ContentParser).
   private var depth = 0
   private def enter(): Unit = {
@@ -254,9 +250,13 @@ final class ObjLexer(val cur: ByteCursor) {
   /** pdf/core/parser.go:484-487: null = discard 4 bytes. */
   def parseNull(): PdfObj = { cur.discard(4); PdfNull }
 
-  /** pdf/core/parser.go:491-574. Dispatch order matters: null/false/true ->
-    * reference regex -> numeric regex -> exponential regex; reference
-    * consumed via read-until-'R'.
+  /** pdf/core/parser.go:491-574. The reference peeks 15 bytes and tries, in
+    * order, the null/false/true prefixes and the regexes
+    * `^\s*(\d+)\s+(\d+)\s+R` (reference), `^[\+-.]*([0-9.]+)` (number) and
+    * its exponential form (matches a subset of the number form). One scan
+    * of the same window decides the token: skipSpaces just ran, so the
+    * window cannot start with `\s`, and the digit and space runs are
+    * maximal, so no backtracking is needed.
     */
   def parseObject(): PdfObj = {
     skipSpaces()
@@ -270,75 +270,42 @@ final class ObjLexer(val cur: ByteCursor) {
       else if (b0 == '<') return parseHexString()
       else if (b0 == '%') { readComment(); skipSpaces() }
       else {
-        // Fast dispatch over the same 15-byte window the regexes saw,
-        // without the byte-copy + string + matcher allocations (this runs
-        // once per file-layer token). Two shapes are decided here, both
-        // exact replicas of the anchored patterns on a window that cannot
-        // start with whitespace (skipSpaces just ran, so the reference
-        // pattern's leading S* is always empty; maximal digit/space runs
-        // need no backtracking):
-        //  - "D+ S+ D+ S+ R" with 'R' inside the window -> PdfRef with the
-        //    same two groups the regex + consume-through-R path produced
-        //    (the scanned 'R' IS the first 'R': an earlier one could only
-        //    sit inside a digit/space run, impossible);
-        //  - "[+-.]* digit" -> the numeric pattern matches -> parseNumber.
-        // Anything else (null/true/false, all-dot backtracking corners,
-        // window-truncated shapes) falls through to the original path.
         @inline def at(i: Int): Int = cur.peekAt(i)
-        // the regex S class [\t\n\f\r ] — NOT the PDF whitespace class,
-        // which additionally holds NUL; a NUL-separated "12<NUL>0 R" must
-        // keep failing the reference pattern exactly like the regex does
-        @inline def isRegexSpace(c: Int): Boolean =
-          c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
         var p = 0
         while (p < 15 && isDecimalDigit(at(p))) p += 1
-        if (p > 0 && p < 15) {
+        if (p > 0) {
+          // "D+ S+ D+ S+ R" with the 'R' inside the window is a reference;
+          // the reference reads through the first 'R', which is this one
+          // (no 'R' can sit inside a digit or space run). Every other
+          // digit-led token matches the number pattern.
           var q = p
           while (q < 15 && isRegexSpace(at(q))) q += 1
-          if (q > p && q < 15) {
-            var r = q
-            while (r < 15 && isDecimalDigit(at(r))) r += 1
-            if (r > q && r < 15) {
-              var s = r
-              while (s < 15 && isRegexSpace(at(s))) s += 1
-              if (s > r && s < 15 && at(s) == 'R') {
-                var n1 = 0L; var i1 = 0
-                while (i1 < p) { n1 = n1 * 10 + (at(i1) - '0'); i1 += 1 }
-                var n2 = 0L; var i2 = q
-                while (i2 < r) { n2 = n2 * 10 + (at(i2) - '0'); i2 += 1 }
-                cur.discard(s + 1) // through the 'R', like the consume loop
-                return PdfRef(n1, n2)
-              }
-            }
+          var r = q
+          if (q > p) while (r < 15 && isDecimalDigit(at(r))) r += 1
+          var s = r
+          if (r > q) while (s < 15 && isRegexSpace(at(s))) s += 1
+          if (s > r && s < 15 && at(s) == 'R') {
+            var n1 = 0L; var i1 = 0
+            while (i1 < p) { n1 = n1 * 10 + (at(i1) - '0'); i1 += 1 }
+            var n2 = 0L; var i2 = q
+            while (i2 < r) { n2 = n2 * 10 + (at(i2) - '0'); i2 += 1 }
+            cur.discard(s + 1)
+            return PdfRef(n1, n2)
           }
-        }
-        if (p == 0) {
-          // leading [+-.]* then a digit -> numeric pattern matches
-          var t = 0
-          while (t < 15 && { val c = at(t); c == '+' || c == '-' || c == '.' }) t += 1
-          if (t < 15 && isDecimalDigit(at(t)) && t > 0) return parseNumber()
-        } else if (p == 15 || !isWhiteSpace(at(p))) {
-          // digit-led token that is NOT a reference: numeric matches
           return parseNumber()
         }
+        // `[\+-.]` is the range '+'..'.', which includes ','. The number
+        // pattern matches when the run is followed by a digit, or when the
+        // run holds a '.' that backtracking can hand to `[0-9.]+`.
+        var t = 0
+        var c = b0
+        var dot = false
+        while (t < 15 && c >= '+' && c <= '.') { dot |= c == '.'; t += 1; c = at(t) }
+        if (dot || (t < 15 && isDecimalDigit(c))) return parseNumber()
         val peekStr = PdfPatterns.str(cur.peek(15))
         if (peekStr.length > 3 && peekStr.startsWith("null")) return parseNull()
         if (peekStr.length > 4 && peekStr.startsWith("false")) return parseBool()
         if (peekStr.length > 3 && peekStr.startsWith("true")) return parseBool()
-        val mRef = reference.matcher(peekStr)
-        if (mRef.find()) {
-          // Consume through 'R' (reference: ReadBytes('R')).
-          val consumed = new StringBuilder
-          var c = cur.readByte()
-          while (c != -1 && c != 'R') { consumed.append(c.toChar); c = cur.readByte() }
-          if (c == -1) throw new PdfError("EOF reading reference")
-          consumed.append('R')
-          val m2 = reference.matcher(consumed.toString)
-          if (!m2.find()) throw new PdfError("Unable to parse reference")
-          return PdfRef(m2.group(1).toLong, m2.group(2).toLong)
-        }
-        if (numeric.matcher(peekStr).find()) return parseNumber()
-        if (exponential.matcher(peekStr).find()) return parseNumber()
         throw new PdfError("Object parsing error - unexpected pattern")
       }
     }

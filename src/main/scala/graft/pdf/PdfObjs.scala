@@ -154,6 +154,13 @@ object PdfObjs {
   def isWhiteSpace(ch: Int): Boolean =
     ch == 0x00 || ch == 0x09 || ch == 0x0a || ch == 0x0c || ch == 0x0d || ch == 0x20
 
+  /** The reference regexes' `\s` class [\t\n\f\r ]: PDF whitespace minus
+    * NUL. The token scanners separate header and reference numbers by it,
+    * so a NUL-separated "12<NUL>0 R" stays a number, as in the reference.
+    */
+  def isRegexSpace(ch: Int): Boolean =
+    ch == 0x09 || ch == 0x0a || ch == 0x0c || ch == 0x0d || ch == 0x20
+
   def isFloatDigit(c: Int): Boolean = (c >= '0' && c <= '9') || c == '.'
   def isDecimalDigit(c: Int): Boolean = c >= '0' && c <= '9'
   def isOctalDigit(c: Int): Boolean = c >= '0' && c <= '7'

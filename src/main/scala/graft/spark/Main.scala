@@ -94,12 +94,21 @@ object Main {
     spark.stop()
   }
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
+  /** The accepted `--key` flags. An unknown key is rejected before the
+    * session starts: a typo such as `--bucket` would otherwise run with the
+    * default and commit that bucket count into the warehouse manifest.
+    */
+  private val Keys: Seq[String] = Seq("input", "warehouse", "run-id", "buckets",
+    "batch-buckets", "partitions", "max-bytes-per-doc", "timeout-ms", "vacuum", "table-summary")
+
+  private[spark] def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.HashMap.empty[String, String]
     var i = 0
     while (i < args.length) {
       val a = args(i)
       if (a.startsWith("--")) {
+        if (!Keys.contains(a.drop(2)))
+          sys.error(s"unknown option $a; accepted: ${Keys.map("--" + _).mkString(" ")}")
         if (i + 1 >= args.length) sys.error(s"missing value for $a")
         m(a.drop(2)) = args(i + 1)
         i += 2

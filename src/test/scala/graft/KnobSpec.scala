@@ -31,6 +31,18 @@ class KnobSpec extends AnyFunSuite {
     assert(keys == Set("spark.graft.reliableCheckpoint"))
   }
 
+  test("graft.pdf compiles only its once-per-file regexes") {
+    // Per-token shapes (xref lines, object headers, references, numbers)
+    // are byte scanners; a regex there would run once per token.
+    val site = "Pattern\\.compile\\(".r
+    val named = "val (\\w+)(?::[^=]*)? = (?:java\\.util\\.regex\\.)?Pattern\\.compile\\(".r
+    val srcs = sources(mainRoot.resolve("graft/pdf")).map(_._2)
+    val names = srcs.flatMap(named.findAllMatchIn(_).map(_.group(1)))
+    assert(srcs.map(site.findAllMatchIn(_).size).sum == names.size, "an unnamed compile site")
+    assert(names.sorted == Seq("eof", "pdfVersion", "reDate", "repairXrefStart", "repairXrefTable",
+      "startXref", "xrefTable"))
+  }
+
   test("no @volatile var in graft.pdf or graft.html") {
     val volatileVar = "@volatile[^\\n]*\\bvar\\b".r
     val hits = for {

@@ -22,7 +22,7 @@ class DocumentSpec extends AnyFunSuite {
   test("parseIndirectObject header: fast path, offset fallback, NUL rejection") {
     import java.nio.charset.StandardCharsets.ISO_8859_1
     def parserOver(src: String) = new PdfFileParser(src.getBytes(ISO_8859_1))
-    // exact "N G obj" at the cursor (fast path)
+    // exact "N G obj" at the cursor
     val p1 = parserOver("7 0 obj\n(hi)\nendobj\n")
     p1.parseIndirectObject() match {
       case ind: PdfIndirect =>
@@ -30,7 +30,7 @@ class DocumentSpec extends AnyFunSuite {
         assert(new String(ind.obj.asInstanceOf[PdfStr].bytes, ISO_8859_1) == "hi")
       case other => fail(s"unexpected $other")
     }
-    // small leading junk: the regex fallback tolerates the offset
+    // small leading junk: the header is found past it in the 20-byte window
     val p2 = parserOver("xx12 0 obj\n<< /A 5 >>\nendobj\n")
     p2.parseIndirectObject() match {
       case ind: PdfIndirect =>
@@ -39,7 +39,7 @@ class DocumentSpec extends AnyFunSuite {
       case other => fail(s"unexpected $other")
     }
     // NUL-separated header: NUL is PDF whitespace but NOT in the header
-    // pattern's class — must reject exactly like the regex always did
+    // pattern's class — rejected exactly like the reference's regex
     val p3 = parserOver("12\u0000 0 obj\n(x)\nendobj\n")
     assertThrows[PdfError](p3.parseIndirectObject())
     // ...while ordinary multi-space separation stays accepted
@@ -466,10 +466,10 @@ class DocumentSpec extends AnyFunSuite {
     assert(Extract(doc("[<< /Subtype /Ink /Popup null >>]")).status == "ok")
   }
 
-  test("XrefLine strict classifier agrees with the regex matchers") {
-    // The r06 fast path must classify a line IDENTICALLY to the original
-    // regex pair (m1 first, then m2) or return null (fall back). Property-
-    // check over canonical, whitespace-variant, hostile and junk shapes.
+  test("XrefLine equals the subsection/entry regex decision on every line") {
+    // Total: the scanner's result, including the NumberFormatException an
+    // overflowing number throws, equals the regex pair's (subsection first,
+    // then entry) on canonical, whitespace-variant, hostile and junk lines.
     val lines = Seq(
       "0000000015 00000 n", "0000000000 65535 f", "0 46", "12 3",
       "0000000015 00000 n ", "15 0 n", "15\t0\tn", "2 7\r", "9 1 f",
@@ -478,28 +478,65 @@ class DocumentSpec extends AnyFunSuite {
       "12  0   n  ", "007 008", "12 34n", "123 456 7", "1 2 3 n",
       "99999999999999999999 0 n", "12 99999999999999999999",
       "2147483647 1", "2147483648 1", "15 2147483648 n", "-1 2 n",
-      "3.5 2", "1234", "0000000015\n00000 n")
-    for (txt <- lines) {
-      val fast = XrefLine.classify(txt)
-      val m1 = PdfPatterns.xrefSubsection.matcher(txt)
-      val m2 = PdfPatterns.xrefEntry.matcher(txt)
-      if (fast != null && fast.kind == 1) {
-        assert(m1.find(), s"fast=sub but regex sub misses: '$txt'")
-        assert(m1.group(1).toLong == fast.first, s"sub first differs: '$txt'")
-      } else if (fast != null && fast.kind == 2) {
-        assert(!m1.find(), s"fast=entry but regex sub matches first: '$txt'")
-        assert(m2.find(), s"fast=entry but regex entry misses: '$txt'")
-        assert(m2.group(1).toLong == fast.first, s"entry first differs: '$txt'")
-        assert(m2.group(2).toLong == fast.gen, s"entry gen differs: '$txt'")
-        assert(m2.group(3) == fast.nf.toString, s"entry nf differs: '$txt'")
-      }
-      // fast == null is always allowed: the caller replays the regexes.
+      "3.5 2", "1234", "0000000015\n00000 n", "abc12 34", "7 1\u0085",
+      "12\u0000 0 n", "00000000000000000000000012 3", "1 2 3 4 n f")
+    def scanned(txt: String) = FileLayerOracle.outcome {
+      val p = XrefLine.classify(txt)
+      if (p == null) None else Some((p.kind, p.first, p.gen, p.nf))
     }
-    // Oversize numbers MUST fall back (the .toInt/.toLong throw is part of
-    // the original semantics).
-    assert(XrefLine.classify("99999999999999999999 0 n") == null)
-    assert(XrefLine.classify("2147483648 1") == null)
-    assert(XrefLine.classify("15 2147483648 n") == null)
+    def check(txt: String): Unit = {
+      val want = FileLayerOracle.outcome(FileLayerOracle.xrefLine(txt))
+      assert(scanned(txt) == want, s"line '${txt.replace("\u0000", "\\0")}'")
+    }
+    lines.foreach(check)
+    assert(scanned("abc12 34") == Right(Some((1, 12L, 0, ' '))))
+    assert(scanned("1 2 3 n") == Right(Some((2, 2L, 3, 'n'))))
+    assert(scanned("2147483648 1").left.map(_._1) == Left(classOf[NumberFormatException]))
+    val r = new scala.util.Random(20261017L)
+    for (_ <- 1 to 1000000) check(FileLayerOracle.hostile(r, 8))
+  }
+
+  test("ObjHeader finds the leftmost header the regex finds in its window") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    val h = new ObjHeader
+    def check(pre: String, window: String, post: String): Unit = {
+      val data = (pre + window + post).getBytes(ISO_8859_1)
+      val got =
+        if (h.find(data, pre.length, pre.length + window.length))
+          Some((h.start - pre.length, h.num, h.gen, h.end - pre.length))
+        else None
+      assert(got == FileLayerOracle.objHeader(window),
+        s"window '${window.replace("\u0000", "\\0")}' after '$pre'")
+    }
+    for (w <- Seq("12 0 obj", "xx12 0 obj", "12\u0000 0 obj", "3  0  obj", "1 2 3 obj",
+        "12 0 ob", "12 0obj", "007\t008\nobj", "1 x 2 0 obj", "99999999999 0 obj"))
+      check("9", w, "9")
+    val r = new scala.util.Random(20261018L)
+    for (_ <- 1 to 1000000)
+      check(FileLayerOracle.hostile(r, 2), FileLayerOracle.hostile(r, 8), FileLayerOracle.hostile(r, 2))
+  }
+
+  test("top-down repair reads headers, rejects NUL separators, overflows like toInt") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    def rebuild(src: String) = new PdfFileParser(src.getBytes(ISO_8859_1)).repairRebuildXrefsTopDown()
+    val t = rebuild("%PDF-1.4\n1 0 obj\nnull\nendobj\n 7  2\tobj\n(x)\nendobj\n")
+    assert(t.keySet == Set(1, 7))
+    assert(t(1).offset == 9 && t(7).offset == 30 && t(7).generation == 2)
+    val nul = intercept[PdfError](rebuild("%PDF-1.4\n12\u0000 0 obj\nnull\nendobj\n"))
+    assert(nul.getMessage == "Unable to detect indirect object signature")
+    val big = intercept[NumberFormatException](rebuild("%PDF-1.4\n99999999999 0 obj\nnull\n"))
+    assert(big.getMessage == "For input string: \"99999999999\"")
+  }
+
+  test("an xref line ending in byte 0x85 is noise, as under Go's end-of-text $") {
+    // Java's $ also matches before a final U+0085 (NEL), which would make
+    // "7 1<0x85>" a subsection renumbering the entries after it 7 and 8.
+    val raw = "xref\n1 2\n7 1\u0085\n0000000100 00000 n\n0000000200 00000 n\n" +
+      "trailer\n<< /Size 3 >>\n"
+    val p = new PdfFileParser(raw.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    p.parseXrefTable()
+    assert(p.xrefs.keySet == Set(1, 2))
+    assert(p.xrefs(1).offset == 100 && p.xrefs(2).offset == 200)
   }
 
   private def manyStreams(n: Int): Array[Byte] = {

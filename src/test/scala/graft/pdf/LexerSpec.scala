@@ -211,31 +211,33 @@ class LexerSpec extends AnyFunSuite {
     assertThrows[PdfError](lexer("maybe").parseBool())
   }
 
-  test("parseObject fast dispatch equals the reference-regex decision") {
-    // The r06 window-scan dispatch must classify references exactly like
-    // the anchored regex did on the 15-byte peek: same groups when it
-    // matches, never a reference when the regex would not match (incl. the
-    // NUL corner — NUL is PDF whitespace but NOT in the regex S class).
+  test("parseObject token dispatch equals the reference-regex decision") {
+    // Total: for every token that reaches the window dispatch, the parsed
+    // object, the cursor position after it, or the exception's class and
+    // message equal those of the null/false/true + reference/number/
+    // exponential regex procedure on the same 15-byte peek (incl. the NUL
+    // corner: NUL is PDF whitespace but NOT in the regex S class).
     val snippets = Seq(
       "12 0 R", "1 0 R /Next", "12 0 R\n", "007 008 R", "12  0   R",
       "12\t0\tR", "12 0 Rx", "12 0R", "1 2 3 R", "12 x", "12.5]",
       "123456789012345 0 R", "12 345678901234 R", "12 0 q",
       "12\u0000" + "0 R", "12 \u0000" + "0 R", "-12 ", "+12 ", ".5 ", "-.002 ",
-      "3e2 ", "12", "0 R", "12 R")
-    for (s <- snippets) {
-      val window = s.take(15)
-      val mRef = PdfPatterns.reference.matcher(window)
-      val expectRef = mRef.find()
+      "3e2 ", "12", "0 R", "12 R", ",5 ", "+,.x", "+,-x", "...", "+++++++++++++++5",
+      "nullx", "truex", "falsex", "xy", "e5 ", "N 0 R")
+    def outcome(s: String, decide: ObjLexer => PdfObj) = {
       val lex = lexer(s)
-      val obj =
-        try Right(lex.parseObject())
-        catch { case e: PdfError => Left(e.getMessage) }
-      if (expectRef)
-        assert(obj == Right(PdfRef(mRef.group(1).toLong, mRef.group(2).toLong)),
-          s"expected ref for '${s.replace("\u0000", "\\0")}', got $obj")
-      else
-        assert(!obj.exists(_.isInstanceOf[PdfRef]),
-          s"unexpected ref for '${s.replace("\u0000", "\\0")}': $obj")
+      FileLayerOracle.outcome((decide(lex), lex.cur.pos))
+    }
+    def check(s: String): Unit =
+      assert(outcome(s, _.parseObject()) == outcome(s, FileLayerOracle.parseToken),
+        s"token '${s.replace("\u0000", "\\0")}'")
+    snippets.foreach(check)
+    val r = new scala.util.Random(20261019L)
+    var n = 0
+    while (n < 1000000) {
+      val s = FileLayerOracle.hostile(r, 10)
+      // tokens the structural cases or skipSpaces take never reach the dispatch
+      if (s.length >= 2 && !PdfObjs.isWhiteSpace(s.charAt(0))) { check(s); n += 1 }
     }
     // exact values on the corners
     assert(lexer("12\u0000" + "0 R").parseObject() == PdfInt(12)) // NUL kills the ref
