@@ -143,8 +143,7 @@ object Bench {
     */
   private def extractionPass(spark: SparkSession, path: String, k: Int): (Long, Long) = {
     import spark.implicits._
-    val ds = Pipeline.extract(spark, spark.read.parquet(path).coalesce(k), "bench",
-      numPartitions = -1)
+    val ds = Pipeline.extract(spark, spark.read.parquet(path).coalesce(k), "bench")
     // Typed Dataset fold (no RDD): count rows while forcing full extraction.
     ds.mapPartitions { it =>
       var n = 0L

@@ -3,7 +3,7 @@ package graft.fixtures
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
-import graft.pdf.Filters
+import graft.pdf.{Filters, PdfCrypt}
 
 /** Deterministic synthetic PDF/HTML corpus builders (FIXTURES.md §3/§4).
   * Every PDF is assembled as raw byte templates so the expected extracted
@@ -595,16 +595,14 @@ object PdfFixtures {
     val opass = "graft-owner".getBytes(ISO_8859_1)
     val upass = Array.emptyByteArray
     val r = if (aes) 4 else 3
-    val o = alg3O(opass, upass, r, 128)
-    val ekey = alg2Key(upass, o, p, id0, r, 128)
-    val u = alg5U(ekey, id0)
-    val okey = objectKey(ekey, 4, 0, aes)
+    val (o, u, ekey) = credentials(upass, opass, p, id0, r, 128)
+    val okey = PdfCrypt.objectKey(ekey, 4, 0, aes)
     val encContent =
       if (aes) {
         val iv = java.util.Arrays.copyOf(java.security.MessageDigest.getInstance("MD5")
           .digest(s"graft-iv-$docId".getBytes(ISO_8859_1)), 16)
         aesEncrypt(okey, iv, content)
-      } else graft.pdf.PdfCrypt.rc4(okey, content)
+      } else PdfCrypt.rc4(okey, content)
     val encDict =
       if (aes)
         s"<< /Filter /Standard /V 4 /R 4 /Length 128 /P $p /O <${hex(o)}> /U <${hex(u)}> " +
@@ -879,14 +877,12 @@ object PdfFixtures {
       .digest(s"graft-ido-$docId".getBytes(ISO_8859_1))
     val opass = "graft-owner".getBytes(ISO_8859_1)
     val upass = Array.emptyByteArray
-    val o = alg3O(opass, upass, r = 3, lengthBits = 128)
-    val ekey = alg2Key(upass, o, p, id0, r = 3, lengthBits = 128)
-    val u = alg5U(ekey, id0)
+    val (o, u, ekey) = credentials(upass, opass, p, id0, r = 3, lengthBits = 128)
     val out = new ByteArrayOutputStream()
     out.write(b("%PDF-1.5\n%âãÏÓ\n"))
     // obj 4: content stream, RC4 with key(4,0)
     val content = contentFor(text)
-    val enc4 = graft.pdf.PdfCrypt.rc4(objectKey(ekey, 4, 0, isAes = false), content)
+    val enc4 = PdfCrypt.rc4(PdfCrypt.objectKey(ekey, 4, 0, isAes = false), content)
     val off4 = out.size().toLong
     out.write(b(s"4 0 obj\n<< /Length ${enc4.length} >>\nstream\n"))
     out.write(enc4)
@@ -908,7 +904,7 @@ object PdfFixtures {
     }
     val first = hdr.length
     val objstmPlain = Filters.flateEncode(b(hdr.toString + payload.toString))
-    val enc6 = graft.pdf.PdfCrypt.rc4(objectKey(ekey, 6, 0, isAes = false), objstmPlain)
+    val enc6 = PdfCrypt.rc4(PdfCrypt.objectKey(ekey, 6, 0, isAes = false), objstmPlain)
     val off6 = out.size().toLong
     out.write(b(s"6 0 obj\n<< /Type /ObjStm /N 3 /First $first /Filter /FlateDecode " +
       s"/Length ${enc6.length} >>\nstream\n"))

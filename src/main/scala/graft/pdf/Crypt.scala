@@ -1,8 +1,5 @@
 package graft.pdf
 
-import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.security.MessageDigest
-
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
@@ -14,7 +11,11 @@ import PdfObjs._
   * (strings + streams; /Parent //Prev //Last keys and Sig /Contents skipped;
   * XRef-type streams never encrypted).
   *
-  * Only decryption is implemented (the engine never writes encrypted PDFs).
+  * The R2-R4 key schedule (padding, Algorithms 2-5, the per-object key) lives
+  * here once, as pure functions in the companion object: the class applies
+  * them to a parsed /Encrypt dictionary to authenticate and decrypt, and
+  * PdfEncrypt applies them to author the O/U values and keys the writer
+  * encrypts with (PdfWriter.writeFileEncrypted, the crypt fixtures).
   */
 final class PdfCrypt private[pdf] (
     val v: Int,
@@ -58,86 +59,17 @@ final class PdfCrypt private[pdf] (
     false
   }
 
-  private def padded(pass: Array[Byte]): Array[Byte] = {
-    val key = new Array[Byte](32)
-    val n = math.min(32, pass.length)
-    System.arraycopy(pass, 0, key, 0, n)
-    if (n < 32) System.arraycopy(PasswordPadding, 0, key, n, 32 - n)
-    key
-  }
-
   /** Algorithm 2: file encryption key (crypt.go:1223-1264). */
-  def alg2(pass: Array[Byte]): Array[Byte] = {
-    val h = CryptoPool.md5()
-    h.update(padded(pass))
-    h.update(o)
-    val pb = new Array[Byte](4)
-    var i = 0
-    while (i < 4) { pb(i) = ((p >> (8 * i)) & 0xff).toByte; i += 1 }
-    h.update(pb)
-    h.update(id0)
-    if (r >= 4 && !encryptMetadata)
-      h.update(Array[Byte](0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte))
-    var hashb = h.digest()
-    if (r >= 3) {
-      var k = 0
-      while (k < 50) {
-        val h2 = CryptoPool.md5()
-        h2.update(hashb, 0, length / 8)
-        hashb = h2.digest()
-        k += 1
-      }
-      java.util.Arrays.copyOf(hashb, length / 8)
-    } else java.util.Arrays.copyOf(hashb, 5)
-  }
+  private def alg2(pass: Array[Byte]): Array[Byte] =
+    fileKey(pass, o, p, id0, r, length, encryptMetadata)
 
-  /** alg3Key (crypt.go:1267-1289). */
-  private def alg3Key(pass: Array[Byte]): Array[Byte] = {
-    var h = CryptoPool.md5()
-    h.update(padded(pass))
-    if (r >= 3) {
-      var i = 0
-      while (i < 50) {
-        val hashb = h.digest()
-        h = CryptoPool.md5()
-        h.update(hashb)
-        i += 1
-      }
-    }
-    val encKey = h.digest()
-    if (r == 2) java.util.Arrays.copyOf(encKey, 5)
-    else java.util.Arrays.copyOf(encKey, length / 8)
-  }
-
-  /** Algorithm 4 (R2 U value). */
-  private def alg4(upass: Array[Byte]): (Array[Byte], Array[Byte]) = {
-    val ekey = alg2(upass)
-    (rc4(ekey, PasswordPadding), ekey)
-  }
-
-  /** Algorithm 5 (R>=3 U value; only the first 16 bytes matter for auth). */
-  private[pdf] def alg5(upass: Array[Byte]): (Array[Byte], Array[Byte]) = {
-    val ekey = alg2(upass)
-    val h = CryptoPool.md5()
-    h.update(PasswordPadding)
-    h.update(id0)
-    var encrypted = rc4(ekey, h.digest())
-    var i = 0
-    while (i < 19) {
-      val ekey2 = ekey.map(b => (b ^ (i + 1)).toByte)
-      encrypted = rc4(ekey2, encrypted)
-      i += 1
-    }
-    (java.util.Arrays.copyOf(encrypted, 32), ekey) // back half zero (not compared)
-  }
-
-  /** Algorithm 6: user password check (crypt.go:1414-1453). */
+  /** Algorithm 6: user password check (crypt.go:1414-1453). Algorithm 4
+    * (R2) or 5 (R>=3) recomputes U from the password's file key.
+    */
   private def alg6(upass: Array[Byte]): Boolean = {
-    val (uGen0, key) =
-      if (r == 2) alg4(upass)
-      else if (r >= 3) alg5(upass)
-      else throw new PdfError("invalid R")
-    var uGen = uGen0
+    if (r < 2) throw new PdfError("invalid R")
+    val key = alg2(upass)
+    var uGen = userValue(key, id0, r)
     var uDoc = u
     if (r >= 3) {
       if (uGen.length > 16) uGen = java.util.Arrays.copyOf(uGen, 16)
@@ -147,21 +79,15 @@ final class PdfCrypt private[pdf] (
     else false
   }
 
-  /** Algorithm 7: owner password check (crypt.go:1455-1490). */
+  /** Algorithm 7: owner password check (crypt.go:1455-1490): undo
+    * Algorithm 3's RC4 over O to recover the user password, then alg6.
+    */
   private def alg7(opass: Array[Byte]): Boolean = {
-    val encKey = alg3Key(opass)
-    var decrypted: Array[Byte] = null
-    if (r == 2) decrypted = rc4(encKey, o)
-    else if (r >= 3) {
-      var s = o.clone()
-      var i = 0
-      while (i < 20) {
-        val newKey = encKey.map(b => (b ^ (19 - i)).toByte)
-        s = rc4(newKey, s)
-        i += 1
-      }
-      decrypted = s
-    } else throw new PdfError("invalid R")
+    val encKey = ownerKey(opass, r, length)
+    val decrypted =
+      if (r == 2) rc4(encKey, o)
+      else if (r >= 3) rc4Chain(encKey, o)
+      else throw new PdfError("invalid R")
     try alg6(decrypted)
     catch { case _: PdfError => false }
   }
@@ -244,19 +170,7 @@ final class PdfCrypt private[pdf] (
     val fd = cryptFilters.getOrElse(filterName, throw new PdfError(s"Unknown crypt filter ($filterName)"))
     fd.cfm match {
       case "AESV3" => encryptionKey
-      case "V2" | "AESV2" =>
-        val isAes = fd.cfm == "AESV2"
-        val ekey = encryptionKey
-        val key = new Array[Byte](ekey.length + 5 + (if (isAes) 4 else 0))
-        System.arraycopy(ekey, 0, key, 0, ekey.length)
-        var i = 0
-        while (i < 3) { key(ekey.length + i) = ((objNum >> (8 * i)) & 0xff).toByte; i += 1 }
-        i = 0
-        while (i < 2) { key(ekey.length + 3 + i) = ((genNum >> (8 * i)) & 0xff).toByte; i += 1 }
-        if (isAes) { key(ekey.length + 5) = 0x73; key(ekey.length + 6) = 0x41
-          key(ekey.length + 7) = 0x6c; key(ekey.length + 8) = 0x54 }
-        val hashb = CryptoPool.md5().digest(key)
-        if (ekey.length + 5 < 16) java.util.Arrays.copyOf(hashb, ekey.length + 5) else hashb
+      case "V2" | "AESV2" => objectKey(encryptionKey, objNum, genNum, fd.cfm == "AESV2")
       case "" => null // identity
       case other => throw new PdfError(s"unsupported crypt filter: $other")
     }
@@ -391,6 +305,96 @@ object PdfCrypt {
       k += 1
     }
     out
+  }
+
+  // ---------------------------------------------- R2-R4 key schedule
+  // Pure functions of the /Encrypt entries, shared by the reader (the class
+  // above) and the writer's credential authoring (PdfEncrypt.credentials).
+
+  /** The password truncated or padded with PasswordPadding to 32 bytes. */
+  def padded(pass: Array[Byte]): Array[Byte] = {
+    val key = new Array[Byte](32)
+    val n = math.min(32, pass.length)
+    System.arraycopy(pass, 0, key, 0, n)
+    if (n < 32) System.arraycopy(PasswordPadding, 0, key, n, 32 - n)
+    key
+  }
+
+  /** Algorithm 2: the file encryption key (crypt.go:1223-1264). */
+  def fileKey(pass: Array[Byte], o: Array[Byte], p: Int, id0: Array[Byte],
+              r: Int, length: Int, encryptMetadata: Boolean): Array[Byte] = {
+    val h = CryptoPool.md5()
+    h.update(padded(pass))
+    h.update(o)
+    val pb = new Array[Byte](4)
+    var i = 0
+    while (i < 4) { pb(i) = ((p >> (8 * i)) & 0xff).toByte; i += 1 }
+    h.update(pb)
+    h.update(id0)
+    if (r >= 4 && !encryptMetadata)
+      h.update(Array[Byte](0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte))
+    var hashb = h.digest()
+    if (r >= 3) {
+      var k = 0
+      while (k < 50) {
+        val h2 = CryptoPool.md5()
+        h2.update(hashb, 0, length / 8)
+        hashb = h2.digest()
+        k += 1
+      }
+      java.util.Arrays.copyOf(hashb, length / 8)
+    } else java.util.Arrays.copyOf(hashb, 5)
+  }
+
+  /** Algorithm 3 steps a-d, the owner RC4 key (crypt.go:1267-1289):
+    * MD5(padded(opass)), re-hashed 50 times over the full digest for R>=3.
+    */
+  def ownerKey(opass: Array[Byte], r: Int, length: Int): Array[Byte] = {
+    var digest = CryptoPool.md5().digest(padded(opass))
+    if (r >= 3) {
+      var i = 0
+      while (i < 50) { digest = CryptoPool.md5().digest(digest); i += 1 }
+    }
+    java.util.Arrays.copyOf(digest, if (r == 2) 5 else length / 8)
+  }
+
+  /** The U value of file key `ekey`: Algorithm 4 (R2, RC4 of the padding)
+    * or Algorithm 5 (R>=3; only the first 16 bytes are significant, the
+    * back half is zeros).
+    */
+  def userValue(ekey: Array[Byte], id0: Array[Byte], r: Int): Array[Byte] =
+    if (r == 2) rc4(ekey, PasswordPadding)
+    else {
+      val h = CryptoPool.md5()
+      h.update(PasswordPadding)
+      h.update(id0)
+      java.util.Arrays.copyOf(rc4Chain(ekey, h.digest()), 32)
+    }
+
+  /** The R>=3 RC4 chain of Algorithms 3, 5 and 7: 20 passes, pass i keyed
+    * with every byte of `key` XOR i. Each pass XORs the data with a
+    * keystream of its key alone, so the passes commute and this one chain
+    * both builds O (Algorithm 3, i = 0..19) and undoes it (Algorithm 7,
+    * where the spec runs i = 19..0 to the same bytes).
+    */
+  def rc4Chain(key: Array[Byte], data: Array[Byte]): Array[Byte] =
+    (0 until 20).foldLeft(data)((s, i) => rc4(key.map(b => (b ^ i).toByte), s))
+
+  /** makeKey (crypt_filters.go), the V2/AESV2 per-object key:
+    * MD5(ekey + objNum LE24 + genNum LE16 [+ "sAlT" for AES]) truncated to
+    * min(len + 5, 16) bytes.
+    */
+  def objectKey(ekey: Array[Byte], objNum: Long, genNum: Long, isAes: Boolean): Array[Byte] = {
+    val key = new Array[Byte](ekey.length + 5 + (if (isAes) 4 else 0))
+    System.arraycopy(ekey, 0, key, 0, ekey.length)
+    var i = 0
+    while (i < 3) { key(ekey.length + i) = ((objNum >> (8 * i)) & 0xff).toByte; i += 1 }
+    i = 0
+    while (i < 2) { key(ekey.length + 3 + i) = ((genNum >> (8 * i)) & 0xff).toByte; i += 1 }
+    if (isAes) { key(ekey.length + 5) = 0x73; key(ekey.length + 6) = 0x41
+      key(ekey.length + 7) = 0x6c; key(ekey.length + 8) = 0x54 }
+    val hashb = CryptoPool.md5().digest(key)
+    if (ekey.length + 5 < 16) java.util.Arrays.copyOf(hashb, ekey.length + 5) else hashb
   }
 
   /** AES-CBC decrypt with IV as the first 16 bytes + PKCS#5-ish pad strip

@@ -250,10 +250,10 @@ object PdfWriter {
     * string/stream-encrypted under their OUTPUT numbers (renumbered 1..n in
     * input order, generation 0 — the same numbering writeFile assigns), the
     * /Encrypt dictionary is appended as an extra clear object, and the
-    * trailer gains /Encrypt + /ID. Key material: O via Algorithm 3, file
-    * key via Algorithm 2 (128-bit), U via Algorithm 5, per-object keys via
-    * the objNum/genNum md5 salt (+"sAlT" for AES) — the writer-side mirror
-    * of the reader's Crypt.scala derivations.
+    * trailer gains /Encrypt + /ID. Key material (PdfEncrypt.credentials):
+    * O via Algorithm 3, file key via Algorithm 2 (128-bit), U via
+    * Algorithm 5; per-object keys via PdfCrypt.objectKey — the reader's own
+    * key schedule in Crypt.scala.
     */
   def writeFileEncrypted(objects: Seq[(Long, PdfObj)],
                          trailerEntries: Seq[(String, PdfObj)],
@@ -262,12 +262,10 @@ object PdfWriter {
     val r = if (enc.aes) 4 else 3
     val v = if (enc.aes) 4 else 2
     val id0 = md5(b("graft-wid-" + enc.seed))
-    val o = PdfEncrypt.alg3O(enc.ownerPass, enc.userPass, r, 128)
-    val key = PdfEncrypt.alg2Key(enc.userPass, o, -1, id0, r, 128)
-    val u = PdfEncrypt.alg5U(key, id0)
+    val (o, u, key) = PdfEncrypt.credentials(enc.userPass, enc.ownerPass, -1, id0, r, 128)
     val encObjects = objects.zipWithIndex.map { case ((orig, body), i) =>
       val outNum = i + 1L // writeFile's renumbering, mirrored here
-      val okey = PdfEncrypt.objectKey(key, outNum, 0, enc.aes)
+      val okey = PdfCrypt.objectKey(key, outNum, 0, enc.aes)
       var ivCounter = 0
       def nextIv(): Array[Byte] = {
         ivCounter += 1

@@ -9,12 +9,12 @@ import org.apache.spark.sql.SparkSession
   *   --input  <pages parquet/iceberg-layout path>        \
   *   --warehouse <output warehouse path>                 \
   *   [--run-id <id>] [--buckets 4096] [--batch-buckets 64] \
-  *   [--partitions -1] [--max-bytes-per-doc 67108864] \
-  *   [--timeout-ms 30000] [--vacuum true] [--table-summary true]
+  *   [--max-bytes-per-doc 67108864] [--timeout-ms 30000] \
+  *   [--vacuum true] [--table-summary true]
   * }}}
   *
   * Reads the Common-Crawl-shaped pages table, runs the resumable extraction
-  * job (dedup -> salted kernel -> snapshot-committed output + lineage), and
+  * job (dedup -> kernel -> snapshot-committed output + lineage), and
   * prints a one-line JSON summary. Re-running after a kill resumes from the
   * last committed snapshot.
   *
@@ -23,7 +23,9 @@ import org.apache.spark.sql.SparkSession
   *    (e.g. 4096 buckets / 64-bucket batches over 10^12 rows);
   *  - executors: kernel is CPU-bound at ~100-250us/doc/core with payload-
   *    sized memory; 4-8 GB executors with 4 cores are ample;
-  *  - spark.sql.shuffle.partitions ~ 2-4x total cores; AQE coalesces;
+  *  - kernel width: the kernel runs on the dedup shuffle's url-hash
+  *    partitions, so set spark.sql.shuffle.partitions ~ 2-4x total cores
+  *    (AQE coalesces; there is no separate pre-kernel repartition);
   *  - spark.sql.files.maxPartitionBytes 128-256 MB keeps scan tasks even.
   */
 object Main {
@@ -36,12 +38,11 @@ object Main {
     val batchBuckets = opts.getOrElse("batch-buckets", "16").toInt
     require(buckets > 0, s"--buckets must be positive, got $buckets")
     require(batchBuckets > 0, s"--batch-buckets must be positive, got $batchBuckets")
-    // -1 (default) = NO pre-kernel shuffle: the dedup window's url-hash
-    // partitioning feeds the kernel. Pass 0 / N to opt into an explicit
-    // url-hash spread for measured-skew inputs.
-    val partitions = opts.getOrElse("partitions", "-1").toInt
     val maxBytes = opts.getOrElse("max-bytes-per-doc",
       graft.Extract.DefaultMaxBytesPerDoc.toString).toInt
+    // 0 or less would mark every non-empty doc skipped_oversize and commit
+    // its buckets as done, so a corrected re-run would resume past them.
+    require(maxBytes > 0, s"--max-bytes-per-doc must be positive, got $maxBytes")
     val timeoutMs = opts.getOrElse("timeout-ms",
       graft.Extract.DefaultTimeoutMs.toString).toLong
     // --vacuum true: sweep stranded uncommitted batch dirs (from previously
@@ -62,7 +63,7 @@ object Main {
     val pages = spark.read.parquet(input)
     val t0 = System.nanoTime()
     val snap = TableIO.runResumable(spark, pages, warehouse, runId,
-      numBuckets = buckets, batchBuckets = batchBuckets, numPartitions = partitions,
+      numBuckets = buckets, batchBuckets = batchBuckets,
       maxBytesPerDoc = maxBytes, timeoutMs = timeoutMs)
     val sec = (System.nanoTime() - t0) / 1e9
 
@@ -99,7 +100,7 @@ object Main {
     * default and commit that bucket count into the warehouse manifest.
     */
   private val Keys: Seq[String] = Seq("input", "warehouse", "run-id", "buckets",
-    "batch-buckets", "partitions", "max-bytes-per-doc", "timeout-ms", "vacuum", "table-summary")
+    "batch-buckets", "max-bytes-per-doc", "timeout-ms", "vacuum", "table-summary")
 
   private[spark] def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.HashMap.empty[String, String]

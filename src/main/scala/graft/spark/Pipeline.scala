@@ -8,17 +8,20 @@ import org.apache.spark.util.CollectionAccumulator
 
 import graft.Extract
 
-/** The extraction pipeline: scan -> dedup-by-url -> salt/partition ->
-  * mapPartitions kernel -> extracted rows (+ per-partition lineage).
+/** The extraction pipeline: scan -> dedup-by-url -> mapPartitions kernel
+  * -> extracted rows (+ per-partition lineage).
   *
   * Scale design (SURVEY.md §2.10, §4.3):
   *  - dedup keeps the LATEST capture per url (window by warc_ts desc) — one
   *    shuffle on url, unavoidable for the semantics;
   *  - the kernel runs inside ONE typed mapPartitions (no shuffle): a pure
   *    Array[Byte] -> ExtractResult function per row, failure-isolated;
-  *  - skew: docs are spread by hashing url (uniform mix of sizes per
-  *    partition beats range-by-size, which would cluster the whales);
-  *    per-doc byte cap (skipped_oversize) bounds the worst straggler;
+  *  - skew: the dedup window's url-hash shuffle already spreads docs
+  *    (a uniform mix of sizes per partition beats range-by-size, which
+  *    would cluster the whales), its width set by spark.sql.shuffle.partitions
+  *    and AQE; a small undeduped scan is spread by TableIO.spreadScan at the
+  *    call site; the per-doc byte cap (skipped_oversize) bounds the worst
+  *    straggler;
   *  - lineage: accumulated per task partition (one row per partition —
   *    thousands of rows at cluster scale, trivially collectible).
   */
@@ -46,33 +49,21 @@ object Pipeline {
       spark: SparkSession,
       pages: DataFrame,
       runId: String,
-      numPartitions: Int = -1,
       maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
       lineageAcc: CollectionAccumulator[LineageRow] = null,
       timeoutMs: Long = Extract.DefaultTimeoutMs): Dataset[ExtractedRow] = {
     import spark.implicits._
     // Project to the kernel's columns BEFORE typing the Dataset: the pages
     // table's text/lang never reach the kernel, so selecting them forced
-    // every extraction scan to decode (and any opt-in repartition to
-    // shuffle) ~12 KB/doc of dead data (guide §6 column pruning).
-    val base = pages
-      .select("url", "warc_ts", "html")
-      .as[KernelInRow]
-    // DEFAULT (-1) is NO pre-kernel shuffle: the scan's own partitioning
+    // every extraction scan to decode ~12 KB/doc of dead data (guide §6
+    // column pruning). No pre-kernel shuffle: the input's own partitioning
     // (spark.sql.files.maxPartitionBytes-sized splits, or the url-hash
     // partitioning left by dedupLatest's window) already spreads the work —
     // re-shuffling the full payload bytes would be the single biggest data
-    // movement in the job. Pass numPartitions > 0 to opt IN to an explicit
-    // url-hash spread for inputs with measured partition skew
-    // (e.g. size-sorted ingest files), or 0 for defaultParallelism spread.
-    val typed =
-      if (numPartitions < 0) base
-      else {
-        val parts =
-          if (numPartitions > 0) numPartitions
-          else spark.sparkContext.defaultParallelism
-        base.repartition(parts, col("url"))
-      }
+    // movement in the job.
+    val typed = pages
+      .select("url", "warc_ts", "html")
+      .as[KernelInRow]
 
     typed.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
@@ -132,9 +123,8 @@ object Pipeline {
     * dedup window already hash-partitions rows by url, so extraction runs
     * directly on those partitions (no second shuffle).
     */
-  def run(spark: SparkSession, pages: DataFrame, runId: String,
-          numPartitions: Int = -1): Dataset[ExtractedRow] =
-    extract(spark, dedupLatest(pages), runId, numPartitions)
+  def run(spark: SparkSession, pages: DataFrame, runId: String): Dataset[ExtractedRow] =
+    extract(spark, dedupLatest(pages), runId)
 
   /** IMAGE extraction over a pages table: the multimodal bridge as a
     * first-class pipeline operator. One mapPartitions pass (same

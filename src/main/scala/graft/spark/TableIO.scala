@@ -2,6 +2,7 @@ package graft.spark
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -147,8 +148,10 @@ object TableIO {
     * Input rows are assigned to `numBuckets` buckets by url hash; buckets are
     * processed in `batchBuckets`-sized batches, each committed as one
     * snapshot. On restart, committed buckets are skipped (partition-pruned at
-    * the scan by the bucket predicate). `failAfterBatches` injects a crash
-    * for the kill/resume integration test.
+    * the scan by the bucket predicate). The kernel runs on the dedup window's
+    * url-hash partitions, so its width is spark.sql.shuffle.partitions (as
+    * coalesced by AQE). `failAfterBatches` injects a crash for the
+    * kill/resume integration test.
     */
   def runResumable(
       spark: SparkSession,
@@ -157,20 +160,16 @@ object TableIO {
       runId: String,
       numBuckets: Int = 16,
       batchBuckets: Int = 4,
-      numPartitions: Int = -1,
       failAfterBatches: Int = -1,
       maxBytesPerDoc: Int = Pipeline.DefaultMaxBytesPerDoc,
       timeoutMs: Long = graft.Extract.DefaultTimeoutMs): Snapshot = {
-    import java.util.UUID
-    currentSnapshot(warehouse).foreach { s =>
-      if (s.numBuckets > 0 && s.numBuckets != numBuckets)
-        throw new IllegalArgumentException(
-          s"warehouse $warehouse was committed with numBuckets=${s.numBuckets}; " +
-            s"resuming with numBuckets=$numBuckets would remap url->bucket " +
-            "assignments and duplicate/miss documents")
-    }
-    val done: Set[Int] = currentSnapshot(warehouse).map(_.committedBuckets).getOrElse(Set.empty)
-    val todo = (0 until numBuckets).filterNot(done.contains)
+    var snap = currentSnapshot(warehouse).getOrElse(Snapshot(0, Set.empty, Nil, Nil))
+    if (snap.numBuckets > 0 && snap.numBuckets != numBuckets)
+      throw new IllegalArgumentException(
+        s"warehouse $warehouse was committed with numBuckets=${snap.numBuckets}; " +
+          s"resuming with numBuckets=$numBuckets would remap url->bucket " +
+          "assignments and duplicate/miss documents")
+    val todo = (0 until numBuckets).filterNot(snap.committedBuckets.contains)
     val multiBatch = todo.length > batchBuckets
     // The dedup window is a full shuffle of the input; without a persist,
     // EVERY batch would re-scan the source table AND re-run that shuffle
@@ -187,49 +186,31 @@ object TableIO {
         withBucket0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       else withBucket0
     try {
-      runBatches(spark, withBucket, warehouse, runId, numBuckets, batchBuckets,
-        numPartitions, failAfterBatches, maxBytesPerDoc, timeoutMs, todo)
+      var batchesDone = 0
+      for (batch <- todo.grouped(batchBuckets)) {
+        if (failAfterBatches >= 0 && batchesDone >= failAfterBatches)
+          throw new RuntimeException(s"injected failure after $batchesDone batches")
+        val subset = withBucket.filter(col("__bucket").isInCollection(batch)).drop("__bucket")
+        val lineageAcc: CollectionAccumulator[LineageRow] =
+          spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$runId-$batchesDone")
+        val extracted = Pipeline.extract(spark, subset, runId,
+          maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
+        val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
+        extracted.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+        val lineageDir = s"$warehouse/lineage/batch-${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
+        // Task retries / speculation can flush duplicate lineage rows (Spark
+        // only guarantees exactly-once accumulator updates inside actions):
+        // keep the LAST attempt per partition.
+        val lineageRows = lineageAcc.value.asScala.toSeq
+          .groupBy(r => (r.run_id, r.partition_id))
+          .values.map(_.maxBy(_.committed_at)).toSeq
+        import spark.implicits._
+        lineageRows.toDF().write.mode(SaveMode.ErrorIfExists).parquet(lineageDir)
+        snap = commit(warehouse, batch.toSet, Some(dataDir), Some(lineageDir), numBuckets)
+        batchesDone += 1
+      }
+      snap
     } finally if (multiBatch) withBucket.unpersist(blocking = false)
-  }
-
-  private def runBatches(
-      spark: SparkSession,
-      withBucket: DataFrame,
-      warehouse: String,
-      runId: String,
-      numBuckets: Int,
-      batchBuckets: Int,
-      numPartitions: Int,
-      failAfterBatches: Int,
-      maxBytesPerDoc: Int,
-      timeoutMs: Long,
-      todo: Seq[Int]): Snapshot = {
-    import java.util.UUID
-    var batchesDone = 0
-    var snap = currentSnapshot(warehouse).getOrElse(Snapshot(0, Set.empty, Nil, Nil))
-    for (batch <- todo.grouped(batchBuckets)) {
-      if (failAfterBatches >= 0 && batchesDone >= failAfterBatches)
-        throw new RuntimeException(s"injected failure after $batchesDone batches")
-      val subset = withBucket.filter(col("__bucket").isInCollection(batch)).drop("__bucket")
-      val lineageAcc: CollectionAccumulator[LineageRow] =
-        spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$runId-$batchesDone")
-      val extracted = Pipeline.extract(spark, subset, runId, numPartitions,
-        maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
-      val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
-      extracted.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-      val lineageDir = s"$warehouse/lineage/batch-${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
-      // Task retries / speculation can flush duplicate lineage rows (Spark
-      // only guarantees exactly-once accumulator updates inside actions):
-      // keep the LAST attempt per partition.
-      val lineageRows = lineageAcc.value.asScala.toSeq
-        .groupBy(r => (r.run_id, r.partition_id))
-        .values.map(_.maxBy(_.committed_at)).toSeq
-      import spark.implicits._
-      lineageRows.toDF().write.mode(SaveMode.ErrorIfExists).parquet(lineageDir)
-      snap = commit(warehouse, batch.toSet, Some(dataDir), Some(lineageDir), numBuckets)
-      batchesDone += 1
-    }
-    snap
   }
 
   /** Recursive delete (shared by vacuum and scratch-dir cleanup). */

@@ -19,25 +19,45 @@ class CryptSpec extends AnyFunSuite {
     0x76, 0x79, 0xAA, 0x02, 0x18, 0xBE, 0xCE, 0xEA, 0x8B, 0x79, 0x86,
     0x72, 0x6A, 0x8C, 0xDB).map(_.toByte)
 
-  private def crypter(): PdfCrypt =
-    new PdfCrypt(v = 2, r = 3, length = 128, o = oVal, u = new Array[Byte](32),
-      oe = null, ue = null, permsBytes = null, p = -3904, encryptMetadata = true,
-      id0 = id0, cryptFilters = Map("StdCF" -> PdfCrypt.FilterDef("V2", 128),
-        "Identity" -> PdfCrypt.FilterDef("", 0)),
-      stringFilter = "Identity", streamFilter = "Identity")
+  private def goldenKey(): Array[Byte] =
+    PdfCrypt.fileKey(Array.emptyByteArray, oVal, -3904, id0, 3, 128, true)
 
   test("algorithm 2 golden (crypt_test.go:59-83)") {
-    val key = crypter().alg2(Array.emptyByteArray)
     val exp = Array(0xf8, 0x94, 0x9c, 0x5a, 0xf5, 0xa0, 0xc0, 0xca,
       0x30, 0xb8, 0x91, 0xc1, 0xbb, 0x2c, 0x4f, 0xf5).map(_.toByte)
-    assert(key.sameElements(exp))
+    assert(goldenKey().sameElements(exp))
   }
 
   test("algorithm 5 golden (crypt_test.go:113-140, first 16 bytes)") {
-    val (u, _) = crypter().alg5(Array.emptyByteArray)
+    val u = PdfCrypt.userValue(goldenKey(), id0, r = 3)
     val exp = Array(0x59, 0x66, 0x38, 0x6c, 0x76, 0xfe, 0x95, 0x7d, 0x3d,
       0x0d, 0x14, 0x3d, 0x36, 0xfd, 0x01, 0x3d).map(_.toByte)
-    assert(u.take(16).sameElements(exp))
+    assert(u.length == 32 && u.take(16).sameElements(exp))
+  }
+
+  test("authored credentials authenticate: R2-R4, 40-128 bits, user and owner password") {
+    val upass = "us3r pass".getBytes(ISO_8859_1)
+    val opass = "0wner".getBytes(ISO_8859_1)
+    val p = -3904
+    val cases = Seq((2, 40, true)) ++
+      (for (r <- Seq(3, 4); len <- Seq(40, 64, 128); em <- if (r == 4) Seq(true, false) else Seq(true))
+        yield (r, len, em))
+    for ((r, len, em) <- cases) {
+      val (o, u, key) = PdfEncrypt.credentials(upass, opass, p, id0, r, len, em)
+      val clue = s"R$r/$len/EncryptMetadata=$em"
+      assert(o.length == 32 && u.length == 32 && key.length == (if (r == 2) 5 else len / 8), clue)
+      def reader() = new PdfCrypt(v = if (r == 4) 4 else if (r == 3) 2 else 1, r = r,
+        length = len, o = o, u = u, oe = null, ue = null, permsBytes = null, p = p,
+        encryptMetadata = em, id0 = id0,
+        cryptFilters = Map("StdCF" -> PdfCrypt.FilterDef("V2", len / 8)),
+        stringFilter = "StdCF", streamFilter = "StdCF")
+      for (pass <- Seq(upass, opass)) {
+        val c = reader()
+        assert(c.authenticate(pass), s"$clue pass=${new String(pass, ISO_8859_1)}")
+        assert(c.encryptionKey.sameElements(key), s"$clue pass=${new String(pass, ISO_8859_1)}")
+      }
+      assert(!reader().authenticate("wrong".getBytes(ISO_8859_1)), clue)
+    }
   }
 
   test("rc4 known vector") {

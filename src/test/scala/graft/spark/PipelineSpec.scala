@@ -222,20 +222,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), "extractImages must not pre-shuffle")
   }
 
-  test("extraction plan: single shuffle (repartition), kernel in one mapPartitions") {
+  test("extraction plan DEFAULT: no pre-kernel shuffle (scan partitions feed the kernel)") {
     val pages = PagesGen.smokeTable(spark)
-    val ds = Pipeline.extract(spark, pages, "plan", numPartitions = 4)
+    val ds = Pipeline.extract(spark, pages, "plan-default")
     val plan = ds.queryExecution.executedPlan.toString
-    // exactly one exchange below the kernel (the url repartition)
-    assert(plan.contains("Exchange"))
+    assert(!plan.contains("Exchange"), s"default path must not shuffle payloads:\n$plan")
     assert(plan.contains("SerializeFromObject")) // typed kernel present
   }
 
-  test("extraction plan DEFAULT: no pre-kernel shuffle (scan partitions feed the kernel)") {
-    val pages = PagesGen.smokeTable(spark)
-    val ds = Pipeline.extract(spark, pages, "plan-default") // numPartitions = -1
-    val plan = ds.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"default path must not shuffle payloads:\n$plan")
+  test("spreadScan: a 1-partition scan gains one keyed exchange, a wide scan is untouched") {
+    val dir = Files.createTempDirectory("spread").toString
+    val ids = spark.range(0, 64).withColumnRenamed("id", "doc_id")
+    ids.coalesce(1).write.parquet(s"$dir/narrow")
+    ids.repartition(8).write.parquet(s"$dir/wide")
+    val narrow = spark.read.parquet(s"$dir/narrow")
+    assert(narrow.rdd.getNumPartitions == 1)
+    val spread = TableIO.spreadScan(narrow, "doc_id")
+    val plan = spread.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning\\(doc_id#\\d+L?, 4\\)".r.findFirstIn(plan).isDefined, plan)
+    assert(spread.rdd.getNumPartitions == 4)
+    assert(spread.count() == 64)
+    val wide = spark.read.parquet(s"$dir/wide")
+    assert(wide.rdd.getNumPartitions >= 4)
+    assert(TableIO.spreadScan(wide, "doc_id") eq wide)
   }
 
   test("extract_text Catalyst expression via SQL") {
